@@ -46,9 +46,14 @@ object Bench {
     val results = names.map { name =>
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      // a failed query records the -1 sentinel, never a fast-looking time
+      // a failed query records the -1 sentinel, never a fast-looking
+      // time; its reason goes to stderr, leaving the stdout JSON alone
       val t = try { runPlan(fn(spark, sfDir)); (System.nanoTime() - t0) / 1e9 }
-        catch { case _: Throwable => -1.0 }
+        catch { case e: Throwable =>
+          System.err.println(
+            s"[bench] $name failed: ${e.getClass.getName}: ${e.getMessage}")
+          -1.0
+        }
       name -> t
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }

@@ -1,7 +1,7 @@
 package graft.core
 
 /** Tiny filesystem helpers shared by the operators that manage per-run
-  * temp directories (CC fixpoint rounds, streaming staging dirs). */
+  * directories (resumable CC fixpoint rounds, streaming staging dirs). */
 object Fs {
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) {

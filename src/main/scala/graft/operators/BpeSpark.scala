@@ -46,58 +46,6 @@ object BpeSpark {
       .agg(sum(col("c")).as("cnt"))
   }
 
-  /** Per-round vocab materializer shared by both trainers. Persists and
-    * eagerly materializes the round, frees the previous round's cache,
-    * and — critically — returns a LINEAGE-CUT Dataset (a scan over the
-    * materialized round's RDD) so the query plan each round's jobs carry
-    * stays CONSTANT-SIZE. Without the cut the logical plan grows by one
-    * map stage per merge round and the per-job plan work (explain
-    * strings, analysis, codegen keys) grows quadratically with rounds —
-    * measured: driver OOM at a 60-merge run with an 8 GB heap, while
-    * 10-merge queries masked it entirely. Same lesson as the CC
-    * fixpoint's per-round parquet persistence, paid in block-manager
-    * blocks instead of files. */
-  private final class RoundVocab(spark: SparkSession) {
-    private var backingId: Option[Int] = None
-    def materialize(ds: Dataset[(Vector[String], Long)])
-        : Dataset[(Vector[String], Long)] = {
-      // Dataset.localCheckpoint(eager) truncates BOTH growth axes while
-      // keeping the cached blocks in compact tungsten InternalRow format
-      // (an earlier ds.rdd-level variant cached deserialized object
-      // graphs — several times the footprint for a vocab documented as
-      // "millions of rows"): the logical plan becomes a constant-size
-      // LogicalRDD scan (a plain per-round persist grows it by one map
-      // stage per round, and the per-job plan work — explain strings,
-      // analysis, codegen keys — grows quadratically: measured driver
-      // OOM at a 60-merge run with an 8 GB heap), and the RDD dependency
-      // chain is cut (task serialization walks it recursively: measured
-      // executor StackOverflowError ~60 rounds in). Trade-off:
-      // localCheckpoint gives up recompute-on-block-loss — an executor
-      // failure mid-training fails the job and training restarts (the
-      // merge table built so far is plain driver data, so a caller can
-      // resume by replaying merges onto a fresh vocab); a production
-      // 30–50k-merge run on flaky hardware would parquet-checkpoint
-      // every ~100 rounds instead (the CC durable-round-store pattern).
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val m = ds.localCheckpoint(eager = true)
-      // Dataset exposes no handle to its checkpoint blocks, so free the
-      // previous round deterministically by diffing the persistent-RDD
-      // registry around the checkpoint; if concurrent activity makes the
-      // diff ambiguous, skip tracking — the blocks then fall to the
-      // ContextCleaner when the old Dataset is GC'd (leak-to-GC, never
-      // a wrong unpersist)
-      val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-      free()
-      backingId = if (added.size == 1) Some(added.head) else None
-      m
-    }
-    def free(): Unit = {
-      backingId.foreach(id => spark.sparkContext.getPersistentRDDs.get(id)
-        .foreach(_.unpersist(blocking = false)))
-      backingId = None
-    }
-  }
-
   /** Train `nMerges` merges; returns (rank, a, b, cnt) in merge order.
     * Stops early when no adjacent pair remains. One merge per round —
     * exactly `trainMergesBatched` with batchSize = 1 (a single-element
@@ -224,7 +172,7 @@ object BpeSpark {
     * each with a `_COMMIT` marker written LAST — a run killed mid-write
     * leaves no marker and resume falls back to the previous committed
     * round. This is the production alternative to localCheckpoint's
-    * recompute trade-off (RoundVocab scaladoc): a multi-hour 30–50k-
+    * recompute trade-off (see the loop below): a multi-hour 30–50k-
     * merge run on flaky hardware restarts from the last committed round
     * instead of from scratch, at the cost of one vocab-sized columnar
     * write per cadence. */
@@ -253,11 +201,22 @@ object BpeSpark {
           java.nio.file.Paths.get(s"$checkpointDir/r$r", "_COMMIT"))
       }
     }
-    val roundVocab = new RoundVocab(spark)
-    var vocab = roundVocab.materialize(vocab0)
-    val merges = Vector.newBuilder[(Int, String, String, Long)]
-    merges ++= merges0
-    try {
+    // Each round's vocab LANDS as a lineage-cut checkpoint (RoundLoop)
+    // and frees the previous one: the per-job plan stays CONSTANT-SIZE.
+    // Uncut, the logical plan grows by one map stage per merge round and
+    // the per-job plan work (explain strings, analysis, codegen keys)
+    // grows quadratically — measured driver OOM at a 60-merge run with
+    // an 8 GB heap, and an executor StackOverflowError ~60 rounds in from
+    // task serialization walking the RDD chain. The blocks stay in
+    // compact tungsten InternalRow format (an rdd-level cache of the
+    // deserialized tuples is several times the footprint). Trade-off: a
+    // localCheckpoint gives up recompute-on-block-loss, so an executor
+    // failure mid-training fails the job; `checkpointEvery` is the
+    // durable alternative.
+    RoundLoop.run() { loop =>
+      var vocab = loop.land(vocab0)
+      val merges = Vector.newBuilder[(Int, String, String, Long)]
+      merges ++= merges0
       var k = merges0.length
       var rounds = rounds0
       var done = false
@@ -277,7 +236,7 @@ object BpeSpark {
           batch.foreach { case (a, b, cnt) =>
             merges += ((k, a, b, cnt)); k += 1
           }
-          vocab = roundVocab.materialize(vocab.map { case (s, c) =>
+          vocab = loop.land(vocab.map { case (s, c) =>
             (batch.foldLeft(s) { case (acc, (a, b, _)) =>
               Bpe.mergeOnce(acc, a, b) }, c)
           })
@@ -288,7 +247,7 @@ object BpeSpark {
         }
       }
       (merges.result(), rounds)
-    } finally roundVocab.free()
+    }
   }
 
   private def writeCheckpoint(spark: SparkSession, dir: String, round: Int,

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed connected components as an iterative DataFrame fixpoint
   * (SURVEY.md §2.f; north_rule: "GraphFrames or iterative DataFrame
@@ -23,23 +22,22 @@ import org.apache.spark.storage.StorageLevel
   *     bucket-write the symmetrized edge table once for the same effect
   *     with spill-to-disk durability.)
   *   - per-round persistence truncates lineage (a driver-loop operator
-  *     otherwise grows plan + RDD dependency chain per round — the
-  *     RoundVocab lesson in BpeSpark.scala) and computes each round's
-  *     plan exactly ONCE. Two interchangeable stores:
-  *       default  — `localCheckpoint(eager)`: blocks stay in the block
-  *                  manager in tungsten format; NO parquet encode/decode,
-  *                  no filesystem round-trip, no per-round read-back job
-  *                  setup. This is the in-session shape (three rounds of
-  *                  driver-side q63 flares traced to the fixed per-round
-  *                  parquet+dispatch cost amplifying box noise — r4–r6).
-  *       durable  — parquet round-trip into a per-run temp dir: survives
-  *                  executor/block loss, makes a multi-hour production
-  *                  fixpoint restartable. (Dataset.checkpoint would
-  *                  compute each round twice — materialize + re-read —
-  *                  hence parquet, not reliable checkpoint.) With a
-  *                  caller-owned dir ([[resumableRun]]) the rounds double
-  *                  as a CRASH checkpoint: a new process reseeds from the
-  *                  last committed round.
+  *     otherwise grows plan + RDD dependency chain per round) and
+  *     computes each round's plan exactly ONCE. The rounds live in a
+  *     [[RoundLoop]], in one of two stores:
+  *       default   — localCheckpoint blocks in the block manager, in
+  *                   tungsten format; NO parquet encode/decode, no
+  *                   filesystem round-trip, no per-round read-back job
+  *                   setup. This is the in-session shape (three rounds of
+  *                   driver-side q63 flares traced to the fixed per-round
+  *                   parquet+dispatch cost amplifying box noise — r4–r6).
+  *       resumable — [[resumableRun]]: parquet rounds in a CALLER-OWNED
+  *                   dir (ParquetStore). They survive executor/block loss
+  *                   and double as a CRASH checkpoint: a new process
+  *                   reseeds from the last committed round.
+  *                   (Dataset.checkpoint would compute each round twice
+  *                   — materialize + re-read — hence parquet, not
+  *                   reliable checkpoint.)
   *   - the input edge plan is cached during init only: it is referenced
   *     4× (node union + symmetrize union) and Spark does not dedupe
   *     common subplans — an expensive upstream derivation (q109's
@@ -55,8 +53,8 @@ import org.apache.spark.storage.StorageLevel
   *     closure-free (codegen).
   *   - round n-1's storage is freed as soon as round n lands; whatever
   *     backs the FINAL round outlives this call (it backs the returned
-  *     DataFrame) and is freed by CcHandle.close() or, for durable runs,
-  *     the JVM shutdown sweep.
+  *     DataFrame) and is freed by CcHandle.close(), or by the
+  *     ContextCleaner once the labels are GC'd.
   *   - hub skew: the neighbor-min uses groupBy(min), which does map-side
   *     partial aggregation — a degree-10^4 hub collapses to one row per
   *     input partition before the shuffle, so no salting is needed on the
@@ -65,174 +63,29 @@ import org.apache.spark.storage.StorageLevel
   */
 object ConnectedComponents {
 
-  import graft.core.Fs.deleteRecursively
-
-  /** ONE JVM shutdown hook for all runs (repeated run() calls in a
-    * long-lived driver must not accumulate hook threads); each durable run
-    * registers its temp dir here and the hook sweeps whatever remains. */
-  private val pendingDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-  private lazy val hookInstalled: Boolean = {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      pendingDirs.forEach(d => deleteRecursively(d))))
-    true
-  }
-
-  /** Per-round persistence. `persist` STAGES the round and returns a
-    * LINEAGE-CUT DataFrame; the caller MUST run exactly one action over
-    * it (the fixpoint's convergence count) and then call `commit()`,
-    * which frees the PREVIOUS round's storage. Staging is lazy where the
-    * store can afford it (LocalStore) so the caller's action both
-    * materializes the round AND computes the count in ONE job — the
-    * eager-then-count shape was two scheduler round-trips per round,
-    * and per-round fixed cost is the dominant term of a driver-loop
-    * operator (guide §1.2; DispatchProbe: 150–450 ms/job on the bench
-    * box). `persistEager` is the no-action-follows variant for the init
-    * round. `releaseFinal` frees whatever backs the last persisted
-    * round (idempotent — it implements CcHandle.close). */
-  private sealed trait RoundStore {
-    def persist(df: DataFrame, round: Int): DataFrame
-    def commit(): Unit
-    def persistEager(df: DataFrame, round: Int): DataFrame
-    def releaseFinal(): Unit
-    /** Called instead of releaseFinal when the fixpoint gives up
-      * (maxIter). Default: free everything. A caller-owned resumable
-      * store overrides to KEEP its files — the committed rounds are
-      * exactly what lets the caller resume with a higher maxIter. */
-    def abandon(): Unit = releaseFinal()
-  }
-
-  /** In-session store: `localCheckpoint(eager)` keeps rounds as tungsten
-    * blocks — no parquet encode/decode or fs round-trip per round. The
-    * checkpoint blocks belong to the RDD inside the returned Dataset's
-    * `LogicalRDD` leaf, so track THAT — a registry diff around the
-    * checkpoint (BpeSpark's RoundVocab technique) is ambiguous here
-    * because the fixpoint's intra-round caches (step1/jt/e) register
-    * their own RDDs lazily DURING the same materialization job.
-    * Previous-round frees are non-blocking (the next round is already
-    * materialized); the final free blocks so close() is deterministic. */
-  private final class LocalStore(spark: SparkSession) extends RoundStore {
-    private var last: Option[org.apache.spark.rdd.RDD[_]] = None
-    private var pending: Option[org.apache.spark.rdd.RDD[_]] = None
-    private def stage(df: DataFrame, eager: Boolean): DataFrame = {
-      val m = df.localCheckpoint(eager = eager)
-      // a miss (plan shape change in a future Spark) leaks to the
-      // ContextCleaner when the Dataset is GC'd — never a wrong unpersist
-      pending = m.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      m
-    }
-    // LAZY checkpoint: the blocks materialize during the caller's
-    // convergence count — round materialization and count fuse into one
-    // job. The previous round's blocks stay alive until commit(): the
-    // staged round's plan READS them, and a localCheckpoint cut cannot
-    // recompute freed blocks.
-    def persist(df: DataFrame, round: Int): DataFrame =
-      stage(df, eager = false)
-    def commit(): Unit = {
-      last.foreach(_.unpersist(blocking = false))
-      last = pending
-      pending = None
-    }
-    def persistEager(df: DataFrame, round: Int): DataFrame = {
-      val m = stage(df, eager = true)
-      commit()
-      m
-    }
-    def releaseFinal(): Unit = {
-      pending.foreach(_.unpersist(blocking = false))
-      pending = None
-      last.foreach(_.unpersist(blocking = true))
-      last = None
-    }
-  }
-
-  /** Durable store: one parquet directory per round under `runDir` —
-    * survives block loss, restartable, the production choice for
-    * multi-hour fixpoints on flaky hardware. Two ownership modes:
-    * anonymous temp dirs (runManaged(durable=true)) are swept at JVM
-    * shutdown if the caller never closes; caller-owned dirs
-    * ([[resumableRun]]) are deliberately NOT swept — the directory IS
-    * the crash checkpoint, deleted only by an explicit close() once the
-    * labels are consumed. `prev` seeds the delete-previous chain when
-    * resuming (the seed round's files are freed as soon as the first
-    * new round commits). */
-  private final class ParquetStore(spark: SparkSession,
-      val runDir: java.io.File, sweepAtShutdown: Boolean,
-      prev: Option[String]) extends RoundStore {
-    if (sweepAtShutdown) {
-      require(hookInstalled)
-      pendingDirs.add(runDir)
-    }
-    private var prevName: Option[String] = prev
-    private var pendingName: Option[String] = None
-    // the parquet write IS the materialization (durability is the whole
-    // point of this store) — persist is eager here; the commit() split
-    // only delays the previous round's delete until the caller's count
-    // has run, keeping the resume invariant (never fewer than one
-    // committed round on disk) identical to the old eager shape
-    def persist(df: DataFrame, round: Int): DataFrame = {
-      val name = s"round_$round"
-      val path = new java.io.File(runDir, name).getAbsolutePath
-      df.write.mode("overwrite").parquet(path)
-      pendingName = Some(name)
-      spark.read.parquet(path)
-    }
-    def commit(): Unit = {
-      if (pendingName.isDefined) {
-        prevName.foreach(n => deleteRecursively(new java.io.File(runDir, n)))
-        prevName = pendingName
-        pendingName = None
-      }
-    }
-    def persistEager(df: DataFrame, round: Int): DataFrame = {
-      val m = persist(df, round)
-      commit()
-      m
-    }
-    def releaseFinal(): Unit = {
-      pendingDirs.remove(runDir)
-      deleteRecursively(runDir)
-    }
-    override def abandon(): Unit = if (sweepAtShutdown) releaseFinal()
-  }
-
-  private object ParquetStore {
-    def temp(spark: SparkSession): ParquetStore =
-      new ParquetStore(spark,
-        java.nio.file.Files.createTempDirectory("graft-cc").toFile,
-        sweepAtShutdown = true, prev = None)
-  }
-
   /** Result handle: `labels` is backed by the final round's storage
-    * (block-manager blocks by default; parquet files for durable runs). A
-    * caller that has FULLY consumed the labels (collected them, or written
-    * them elsewhere) should call `close()` to free that storage
-    * immediately instead of waiting for GC / the JVM shutdown sweep — a
-    * long-lived driver running many fixpoints would otherwise accumulate
-    * one final-round footprint per run. The DataFrame must not be used
-    * after close(). Idempotent. */
+    * (block-manager blocks by default; parquet files for resumable runs).
+    * A caller that has FULLY consumed the labels (collected them, or
+    * written them elsewhere) should call `close()` to free that storage
+    * immediately instead of waiting for GC — a long-lived driver running
+    * many fixpoints would otherwise accumulate one final-round footprint
+    * per run. The DataFrame must not be used after close(). Idempotent. */
   final class CcHandle private[ConnectedComponents] (
-      val labels: DataFrame, store: RoundStore,
+      val labels: DataFrame, loop: RoundLoop,
       /** fixpoint rounds actually executed (incl. the final no-change
         * round) — the per-round job cost dominates small graphs, so this
         * is the number to watch when a topology gets slower */
       val rounds: Int) {
-    def close(): Unit = store.releaseFinal()
+    def close(): Unit = loop.close()
   }
 
   /** @param edges DataFrame with long columns `src`, `dst`
-    * @param durable true = parquet rounds (restartable, survives block
-    *   loss); false (default) = localCheckpoint rounds (fastest in-session
-    *   shape). Labels are identical either way.
     * @return DataFrame (node LONG, comp LONG), comp = min id in component.
-    *   Backing storage lives until GC/JVM shutdown; use `runManaged` to
-    *   reclaim it earlier. */
+    *   Backing storage lives until GC; use `runManaged` to reclaim it
+    *   earlier. */
   def run(spark: SparkSession, edges: DataFrame,
-      maxIter: Int = 50, durable: Boolean = false,
-      smallGraphThreshold: Long = 0L): DataFrame =
-    runManaged(spark, edges, maxIter, durable, smallGraphThreshold).labels
+      maxIter: Int = 50, smallGraphThreshold: Long = 0L): DataFrame =
+    runManaged(spark, edges, maxIter, smallGraphThreshold).labels
 
   /** As `run`, returning a handle whose close() frees the run's backing
     * storage once the caller has fully consumed the labels.
@@ -250,12 +103,9 @@ object ConnectedComponents {
     *   small even when the corpus is not. 0 (the default) disables —
     *   q63/q88 keep exercising the distributed path unconditionally. */
   def runManaged(spark: SparkSession, edges: DataFrame,
-      maxIter: Int = 50, durable: Boolean = false,
-      smallGraphThreshold: Long = 0L): CcHandle = {
-    val store: RoundStore =
-      if (durable) ParquetStore.temp(spark) else new LocalStore(spark)
-    fixpoint(spark, edges, maxIter, store, seed = None, smallGraphThreshold)
-  }
+      maxIter: Int = 50, smallGraphThreshold: Long = 0L): CcHandle =
+    fixpoint(spark, edges, maxIter, files = None, seed = None,
+      smallGraphThreshold)
 
   /** Crash-resumable fixpoint in a CALLER-OWNED checkpoint dir — the
     * north-rule resume contract, for fixpoints long enough that
@@ -264,7 +114,8 @@ object ConnectedComponents {
     * (subdir `round_N` whose `_SUCCESS` marker the parquet job commit
     * wrote — a killed mid-write round has no marker and is ignored,
     * then overwritten) seeds the labels and the round counter; absent
-    * any committed round this is a fresh durable run rooted at `dir`.
+    * any committed round this is a fresh parquet-round run rooted at
+    * `dir`.
     *
     * Resuming from ANY committed round is correct, not just the last
     * one before a crash: every persisted labeling is a monotone
@@ -290,81 +141,79 @@ object ConnectedComponents {
       (spark.read.parquet(new java.io.File(root, s"round_$n").getPath)
         .select("node", "comp"), n)
     }
-    val store = new ParquetStore(spark, root, sweepAtShutdown = false,
-      prev = seed.map { case (_, n) => s"round_$n" })
-    fixpoint(spark, edges, maxIter, store, seed, smallGraph = 0L)
+    fixpoint(spark, edges, maxIter,
+      Some(new ParquetStore(root, seed.map(_._2))), seed, smallGraph = 0L)
   }
 
   private def fixpoint(spark: SparkSession, edges: DataFrame,
-      maxIter: Int, store: RoundStore,
-      seed: Option[(DataFrame, Int)], smallGraph: Long): CcHandle = {
-    import spark.implicits._
+      maxIter: Int, files: Option[ParquetStore],
+      seed: Option[(DataFrame, Int)], smallGraph: Long): CcHandle =
+    RoundLoop.run(files) { loop =>
+      import spark.implicits._
 
-    // the input edge plan appears FOUR times below (both legs of the
-    // node union, both legs of the symmetrize union) and Spark does not
-    // dedupe common subplans — fine when `edges` is a parquet scan
-    // (q63/q88), but when it is an expensive derivation (q109 feeds the
-    // whole containment-pair join in here) init would execute it 4×
-    // (measured: q109 14.0 s in the r7 bench vs ~6.5 s with the cache).
-    // Cache it for init only: edge-granularity, freed as soon as the
-    // symmetrized/cached `e` is materialized below.
-    val raw = edges.selectExpr("CAST(src AS BIGINT) AS u",
-      "CAST(dst AS BIGINT) AS v")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    var iter = seed.map(_._2).getOrElse(0)
-    var changed = 1L
-    // caches visible to the finally so ANY failure — init actions
-    // included — frees them, not just mid-round ones
-    var labels: DataFrame = null
-    var e: DataFrame = null
-    var roundCaches: Seq[DataFrame] = Nil
-    try {
-    // symmetrize once; self-loops dropped; hash-partitioned by the per-round
-    // join key and cached so rounds never re-shuffle the big side. The
-    // partition count is SCALE-ADAPTIVE (guide §2; Partitioning scaladoc):
-    // every fixpoint round launches stages as wide as this cache, so a
-    // small dup-pair graph must not inherit the corpus-sized shuffle
-    // partition conf — ceiling-clamped, identical at real edge scale.
-    val eSym = raw.unionByName(raw.select(col("v").as("u"), col("u").as("v")))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    e = eSym
-      .repartition(Partitioning.adaptiveParts(spark, eSym), col("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // materialize e NOW (round 1 would have paid this anyway): the raw
-    // cache can then be dropped before the fixpoint holds two edge-scale
-    // caches at once, and the count doubles as the small-graph gate
-    val nEdges = e.count()
-    if (smallGraph > 0 && seed.isEmpty && nEdges <= smallGraph) {
+      // the input edge plan appears FOUR times below (both legs of the
+      // node union, both legs of the symmetrize union) and Spark does not
+      // dedupe common subplans — fine when `edges` is a parquet scan
+      // (q63/q88), but when it is an expensive derivation (q109 feeds the
+      // whole containment-pair join in here) init would execute it 4×
+      // (measured: q109 14.0 s in the r7 bench vs ~6.5 s with the cache).
+      // Cache it for init only: edge-granularity, freed as soon as the
+      // symmetrized/cached `e` is materialized below.
+      val raw = loop.cache(edges.selectExpr("CAST(src AS BIGINT) AS u",
+        "CAST(dst AS BIGINT) AS v"))
+      // symmetrize once; self-loops dropped; hash-partitioned by the
+      // per-round join key and cached so rounds never re-shuffle the big
+      // side. The partition count is SCALE-ADAPTIVE (guide §2;
+      // Partitioning scaladoc): every fixpoint round launches stages as
+      // wide as this cache, so a small dup-pair graph must not inherit the
+      // corpus-sized shuffle partition conf — ceiling-clamped, identical
+      // at real edge scale.
+      val eSym = raw
+        .unionByName(raw.select(col("v").as("u"), col("u").as("v")))
+        .where(col("u") =!= col("v"))
+        .distinct()
+      val e = loop.cache(eSym
+        .repartition(Partitioning.adaptiveParts(spark, eSym), col("v")))
+      // materialize e NOW (round 1 would have paid this anyway): the raw
+      // cache can then be dropped before the fixpoint holds two edge-scale
+      // caches at once, and the count doubles as the small-graph gate
+      val nEdges = e.count()
       val nodesDf = raw.select(col("u").as("n"))
         .unionByName(raw.select(col("v").as("n"))).distinct()
       // nodes can exceed edges (self-loop-only nodes) — gate BOTH
       // measured counts before collecting anything
-      if (nodesDf.count() <= smallGraph) {
+      if (smallGraph > 0 && seed.isEmpty && nEdges <= smallGraph &&
+          nodesDf.count() <= smallGraph) {
         val uf = new graft.core.UnionFind
         nodesDf.as[Long].collect().foreach(uf.add)
         e.select(col("u"), col("v")).as[(Long, Long)].collect()
           .foreach { case (a, b) => uf.union(a, b) }
+        // the labels are a LocalRelation — nothing distributed backs them
         val lbl = uf.components().toSeq.sortBy(_._1).toDF("node", "comp")
-        // the labels are a LocalRelation — nothing distributed backs
-        // them; close() still frees whatever the store allocated (the
-        // resumable dir / temp dir; a LocalStore holds nothing yet)
-        return new CcHandle(lbl, store, 0)
+        new CcHandle(lbl, loop, 0)
+      } else {
+        // every endpoint is a node (self-loops contribute a node, no
+        // edge); a resumed run starts from the seed round's labels instead
+        // (already lineage-cut: a fresh parquet read). Eager: no caller
+        // action follows the init round, and the raw cache it reads is
+        // freed on the next line — round 0 must not be left lazy over a
+        // freed cache.
+        val labels = seed.map(_._1).getOrElse(loop.land(
+          raw.select(col("u").as("node"))
+            .unionByName(raw.select(col("v").as("node")))
+            .distinct()
+            .withColumn("comp", col("node"))))
+        loop.uncache(raw)
+        contract(loop, e, labels, seed.map(_._2).getOrElse(0), maxIter)
       }
     }
-    // every endpoint is a node (self-loops contribute a node, no edge);
-    // a resumed run starts from the seed round's labels instead (already
-    // lineage-cut: a fresh parquet read). Eager: no caller action follows
-    // the init round, and the raw cache it reads is freed on the next
-    // line — round 0 must not be left lazy over a freed cache.
-    labels = seed.map(_._1).getOrElse(store.persistEager(
-      raw.select(col("u").as("node"))
-        .unionByName(raw.select(col("v").as("node")))
-        .distinct()
-        .withColumn("comp", col("node")),
-      0))
-    raw.unpersist(blocking = false)
+
+  /** The fixpoint rounds proper, from `labels0` after `iter0` rounds. */
+  private def contract(loop: RoundLoop, e: DataFrame, labels0: DataFrame,
+      iter0: Int, maxIter: Int): CcHandle = {
+    var labels = labels0
+    var iter = iter0
+    var changed = 1L
     while (changed > 0 && iter < maxIter) {
       // 1. neighbor-min: comp of v flows to u (map-side combine on groupBy)
       val nbrMin = e.join(labels.withColumnRenamed("node", "v"), Seq("v"))
@@ -377,18 +226,17 @@ object ConnectedComponents {
       // cached edge blocks start evicting; at 10^12 edges a 3× edge join
       // per round is the difference between the plan and 3× the plan).
       // Node-granularity rows, freed right after the round materializes.
-      val step1 = labels.join(nbrMin, Seq("node"), "left_outer")
+      val step1 = loop.cache(labels.join(nbrMin, Seq("node"), "left_outer")
         .select(col("node"), col("comp").as("oldComp"),
-          least(col("comp"), coalesce(col("nbrComp"), col("comp"))).as("comp1"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      roundCaches = Seq(step1)
+          least(col("comp"), coalesce(col("nbrComp"), col("comp")))
+            .as("comp1")))
       // 1b. root update (the hash-to-min trick): members report their new
       // min UP to the label they were pointing at, so the jump table the
       // steps below read is the previous labels IMPROVED by this round's
       // member discoveries. Without it, a merge discovered at one member
       // of an already-contracted cluster (one bridge endpoint) reaches the
       // cluster's root only hop-by-hop along original edges — measured 22
-      // rounds on the q88 bridged-chain topology vs 7 with it (CcRoundsProbe;
+      // rounds on the q88 bridged-chain topology vs 7 with it (BASELINE.md;
       // on a 10^12-edge graph each round is a full edge-join job, so round
       // count IS the cost). The aggregate is label-granularity (map-side
       // combine collapses each cluster to one row per partition).
@@ -400,12 +248,10 @@ object ConnectedComponents {
         .groupBy(col("oldComp").as("node"))
         .agg(min(col("comp1")).as("memberMin"))
       // jt feeds BOTH jumps — same dedupe argument as step1
-      val jt = labels.join(rootMin, Seq("node"), "left_outer")
+      val jt = loop.cache(labels.join(rootMin, Seq("node"), "left_outer")
         .select(col("node"),
           least(col("comp"), coalesce(col("memberMin"), col("comp")))
-            .as("best"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      roundCaches = Seq(step1, jt)
+            .as("best")))
       // 2. pointer jump through the improved table: comp2(u) = jt(comp1(u))
       val jump = jt.select(col("node").as("comp1"), col("best").as("jumped"))
       val step2 = step1.join(jump, Seq("comp1"), "left_outer")
@@ -430,46 +276,31 @@ object ConnectedComponents {
             .as("comp"))
       iter += 1
       // convergence count, FUSED with the round's materialization: the
-      // store stages the round as a LAZY localCheckpoint, so this ONE
-      // count job computes the round, persists its blocks, and counts
-      // the changed labels in a single scheduler round-trip (round 8:
-      // the eager-checkpoint-then-count shape paid two jobs per round —
-      // guide §1.2, per-round fixed cost dominates a driver loop). The
-      // count itself stays a codegen'd filter over the materializing
-      // rows (no closures, exact where an accumulator could overshoot
-      // on task retries); the durable store persists eagerly inside
-      // persist() instead (parquet IS its storage) and the count reads
-      // the files back, exactly as before.
-      val round = store.persist(step3, iter)
-      changed = round.where(col("oldComp") =!= col("comp")).count()
-      store.commit()
+      // round is staged lazily, so this ONE count job computes the round,
+      // persists its blocks, and counts the changed labels in a single
+      // scheduler round-trip. The count itself stays a codegen'd filter
+      // over the materializing rows (no closures, exact where an
+      // accumulator could overshoot on task retries); a ParquetStore
+      // writes the round inside the staging instead (parquet IS its
+      // storage) and the count reads the files back.
+      val (round, nChanged) = loop.converge(step3)(
+        _.where(col("oldComp") =!= col("comp")).count())
+      changed = nChanged
       // the round's storage now holds everything downstream needs — free
       // the intra-round caches before the next round allocates its own
-      step1.unpersist(blocking = false)
-      jt.unpersist(blocking = false)
-      roundCaches = Nil
+      loop.uncache(step1, jt)
       labels = round.select("node", "comp")
     }
-    } finally {
-      // release everything cached even when a round throws — a failed
-      // fixpoint must not pin MEMORY_AND_DISK blocks for the session
-      // (the input cache, the edge set AND any current-round
-      // intermediates; unpersist is idempotent on the success path)
-      raw.unpersist(blocking = false)
-      roundCaches.foreach(_.unpersist(blocking = false))
-      if (e != null) e.unpersist(blocking = false)
-    }
+    loop.uncache(e)
     // a fixpoint that exits on maxIter has MULTIPLE labels inside some
     // component — silently returning them would poison every downstream
-    // join/canonicalization; free the run's storage and fail loudly instead
-    if (changed != 0) {
-      // resumable stores keep their committed rounds (resume with a
-      // higher maxIter); everything else is freed
-      store.abandon()
+    // join/canonicalization; fail loudly instead (the loop frees the
+    // run's storage; a resumable run keeps its committed rounds, so the
+    // caller can resume with a higher maxIter)
+    if (changed != 0)
       throw new IllegalStateException(
         s"connected components did not converge within $maxIter rounds " +
           s"($changed labels still changing) — raise maxIter")
-    }
-    new CcHandle(labels, store, iter)
+    new CcHandle(loop.outputRound(labels), loop, iter)
   }
 }

@@ -130,10 +130,10 @@ object Dedup {
     * ~(8 + 8·numHashes) bytes/doc — the metadata-vs-payload trade of
     * guide §2.3/§5: at corpus scale that is a few hundred bytes per
     * document in MEMORY_AND_DISK against three saved full-corpus scans
-    * plus their shingle/hash CPU. The result is materialized (same
-    * eager-checkpoint contract as linkPredict) BEFORE the signature
-    * blocks are freed — a truncated-lineage checkpoint cannot be
-    * recomputed after unpersist. */
+    * plus their shingle/hash CPU. The result is materialized (the
+    * RoundLoop output contract) BEFORE the signature blocks are freed —
+    * a truncated-lineage checkpoint cannot be recomputed after
+    * unpersist. */
   def minhashNearDups(docs: DataFrame, textCol: String, idCol: String,
       k: Int = 3, numHashes: Int = 64, bands: Int = 16,
       threshold: Double = 0.7): DataFrame = {
@@ -142,9 +142,9 @@ object Dedup {
     // candidates), quietly reducing recall
     require(bands > 0 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes) evenly")
-    val sigs = minhashSignatures(docs, textCol, idCol, k, numHashes)
-      .localCheckpoint(eager = true)
-    try {
+    RoundLoop.run() { loop =>
+      val sigs = loop.checkpoint(
+        minhashSignatures(docs, textCol, idCol, k, numHashes))
       val cands = lshCandidatePairs(sigs, idCol, bands, numHashes / bands)
       val est = cands
         .join(sigs.select(col(idCol).as("a"), col("signature").as("sig_a")),
@@ -154,16 +154,8 @@ object Dedup {
         .withColumn("est_jaccard",
           expr("CAST(size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), " +
             "v -> v)) AS DOUBLE) / CAST(size(sig_a) AS DOUBLE)"))
-      est.where(col("est_jaccard") >= threshold)
-        .select("a", "b", "est_jaccard")
-        .localCheckpoint(eager = true)
-    } finally {
-      // free the signature blocks now that the result is materialized;
-      // a collectFirst miss leaks to the ContextCleaner, never a wrong
-      // unpersist (the LocalStore pattern)
-      sigs.queryExecution.analyzed.collectFirst {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
+      loop.output(est.where(col("est_jaccard") >= threshold)
+        .select("a", "b", "est_jaccard"))
     }
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Iterative / combinatorial graph analytics over DataFrame edge lists —
   * the KG-side operators a construction pipeline runs AFTER the triples
@@ -50,22 +49,13 @@ object Graphs {
       .unionByName(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
 
-  /** RDD backing a localCheckpoint'ed Dataset (its LogicalRDD leaf) —
-    * the handle for freeing a round's blocks once the next round is
-    * materialized (the CC LocalStore technique; a collectFirst miss
-    * leaks to the ContextCleaner, never a wrong unpersist). */
-  private def ckptRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }
-
   /** Symmetric (both-direction) adjacency over the canonical undirected
     * edge set, columns named (`key`, `value`), repartitioned on `key`
-    * and cached — the build every iterative undirected operator starts
-    * with, shared so the partitioning/caching policy cannot drift
-    * between them. Caller owns the unpersist. */
-  private def symmetricAdjacency(spark: SparkSession, edges: DataFrame,
-      key: String, value: String): DataFrame = {
+    * and cached in `loop` — the build every iterative undirected
+    * operator starts with, shared so the partitioning/caching policy
+    * cannot drift between them. */
+  private def symmetricAdjacency(spark: SparkSession, loop: RoundLoop,
+      edges: DataFrame, key: String, value: String): DataFrame = {
     val und = canonicalUndirected(edges)
     val sym = und.select(col("u").as(key), col("v").as(value))
       .unionByName(und.select(col("v").as(key), col("u").as(value)))
@@ -73,8 +63,8 @@ object Graphs {
     // once and then probed by MANY small driver-loop rounds — pinning it
     // to numShufflePartitions makes every round's stages that wide no
     // matter how small the graph is (see Partitioning's scaladoc)
-    sym.repartition(Partitioning.adaptiveParts(spark, sym), col(key))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    loop.cache(
+      sym.repartition(Partitioning.adaptiveParts(spark, sym), col(key)))
   }
 
   // ------------------------------------------------------------------
@@ -115,10 +105,9 @@ object Graphs {
     *     neighbor-min; no salting needed on the aggregate.
     *   - the fixed iteration count keeps the whole run ONE linear
     *     Catalyst plan (each rank_k referenced exactly once by
-    *     rank_{k+1}) — no per-round materialization is needed at k ≤ ~8;
-    *     the final ranks are localCheckpoint'ed so the caches can be
-    *     freed before returning (a production run at higher k would
-    *     switch to the CC RoundStore pattern).
+    *     rank_{k+1}) — no per-round materialization is needed at k ≤ ~8,
+    *     and RoundLoop.iterate cuts lineage past that; the final ranks
+    *     are checkpointed so the caches can be freed before returning.
     *
     * @param edges DataFrame with castable-to-long `src`, `dst`
     * @return (node BIGINT, rank BIGINT), rank in units of 1/scale */
@@ -153,76 +142,53 @@ object Graphs {
     require(scale >= 1 && scale <= 100000000000000000L,
       s"scale=$scale out of [1, 1e17]")
 
-    val eRaw = edges
-      .selectExpr("CAST(src AS BIGINT) AS src", "CAST(dst AS BIGINT) AS dst")
-      .where(col("src") =!= col("dst"))
-      .distinct()
-    // scale-adaptive partitioning for the per-round cached edge state
-    // (guide §2; see Partitioning) — ceiling-clamped, so at corpus scale
-    // this is numShufflePartitions exactly as before
-    val e = eRaw
-      .repartition(Partitioning.adaptiveParts(spark, eRaw), col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // derived FROM the src partitioning — groupBy(src) reuses it, no shuffle
-    val deg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // nodes carry an is_seed flag so the restart term is a column, not a
-    // per-iteration join: uniform runs flag every node (seed semantics
-    // degenerate to the classic formulation bit-exactly)
-    val allNodes = e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct()
-    val nodes = (seeds match {
-      case None => allNodes.withColumn("is_seed", lit(true))
-      case Some(s) =>
-        val sd = s.selectExpr("CAST(node AS BIGINT) AS node").distinct()
-        allNodes.join(broadcast(sd.withColumn("is_seed", lit(true))),
-            Seq("node"), "left_outer")
-          .select(col("node"),
-            coalesce(col("is_seed"), lit(false)).as("is_seed"))
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    RoundLoop.run() { loop =>
+      val eRaw = edges
+        .selectExpr("CAST(src AS BIGINT) AS src", "CAST(dst AS BIGINT) AS dst")
+        .where(col("src") =!= col("dst"))
+        .distinct()
+      // scale-adaptive partitioning for the per-round cached edge state
+      // (guide §2; see Partitioning) — ceiling-clamped, so at corpus scale
+      // this is numShufflePartitions exactly as before
+      val e = loop.cache(eRaw
+        .repartition(Partitioning.adaptiveParts(spark, eRaw), col("src")))
+      // derived FROM the src partitioning — groupBy(src) reuses it, no
+      // shuffle
+      val deg = loop.cache(e.groupBy("src").agg(count(lit(1)).as("outdeg")))
+      // nodes carry an is_seed flag so the restart term is a column, not a
+      // per-iteration join: uniform runs flag every node (seed semantics
+      // degenerate to the classic formulation bit-exactly)
+      val allNodes = e.select(col("src").as("node"))
+        .unionByName(e.select(col("dst").as("node")))
+        .distinct()
+      val nodes = loop.cache(seeds match {
+        case None => allNodes.withColumn("is_seed", lit(true))
+        case Some(s) =>
+          val sd = s.selectExpr("CAST(node AS BIGINT) AS node").distinct()
+          allNodes.join(broadcast(sd.withColumn("is_seed", lit(true))),
+              Seq("node"), "left_outer")
+            .select(col("node"),
+              coalesce(col("is_seed"), lit(false)).as("is_seed"))
+      })
       val m = nodes.where(col("is_seed")).count()
       require(m > 0, "rank fixpoint with an empty seed/node set")
       val init = scale / m
       val base = (15L * init) / 100L
 
-      var ranks = nodes.select(col("node"),
+      val ranks0 = nodes.select(col("node"),
         when(col("is_seed"), lit(init)).otherwise(lit(0L)).as("rank"))
-      // rounds past the single-linear-plan regime (~8 nested rounds)
-      // get a lineage cut, per this scaladoc's own design note — an
-      // uncut 32-round plan stalls the driver in analysis/optimization
-      // (scale-bug pattern 3); each cut frees its predecessor's blocks
-      var prevCut: Option[org.apache.spark.rdd.RDD[_]] = None
-      for (i <- 1 to iters) {
+      loop.output(loop.iterate(ranks0, iters) { (ranks, _) =>
         val inflow = e.join(deg, Seq("src"))
           .join(ranks.withColumnRenamed("node", "src"), Seq("src"))
           .select(col("dst").as("node"),
             expr("rank div outdeg").as("contrib"))
           .groupBy("node").agg(sum(col("contrib")).as("inflow"))
-        ranks = nodes.join(inflow, Seq("node"), "left_outer")
+        nodes.join(inflow, Seq("node"), "left_outer")
           .select(col("node"),
             (when(col("is_seed"), lit(base)).otherwise(lit(0L)) +
               expr(s"(85 * coalesce(inflow, 0L)) div 100"))
               .as("rank"))
-        if (i % 8 == 0 && i < iters) {
-          val cut = ranks.localCheckpoint(eager = true)
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = ckptRdd(cut)
-          ranks = cut
-        }
-      }
-      // one action materializes the remaining rounds; the checkpoint
-      // blocks back the returned DataFrame so the input caches (and any
-      // mid-run cut) can be freed NOW instead of pinning edge-scale
-      // storage for the caller's lifetime
-      val out = ranks.localCheckpoint(eager = true)
-      prevCut.foreach(_.unpersist(blocking = false))
-      out
-    } finally {
-      e.unpersist(blocking = false)
-      deg.unpersist(blocking = false)
-      nodes.unpersist(blocking = false)
+      })
     }
   }
 
@@ -274,23 +240,17 @@ object Graphs {
       rounds: Int): DataFrame = {
     require(k >= 1, s"k=$k must be >= 1")
     require(rounds >= 1 && rounds <= 64, s"rounds=$rounds out of [1,64]")
-    val adj = symmetricAdjacency(spark, edges, "w", "n")
-    try {
+    RoundLoop.run() { loop =>
+      val adj = symmetricAdjacency(spark, loop, edges, "w", "n")
+      val killCount = (d: DataFrame) => d.where(col("deg") < k).count()
       // initial degrees reuse adj's hash partitioning on w — no shuffle.
-      // LAZY checkpoint + kill count: the ONE count job materializes the
-      // degree blocks AND counts the sub-k nodes (round 8 — the eager
-      // checkpoint followed by a separate isEmpty probe paid two
-      // scheduler round-trips per round; guide §1.2, per-round fixed
-      // cost dominates a driver loop). Each round's count doubles as the
-      // NEXT round's convergence check.
-      var deg = adj.groupBy(col("w").as("node"))
-        .agg(count(lit(1)).as("deg"))
-        .localCheckpoint(eager = false)
-      var nKill = deg.where(col("deg") < k).count()
-      // each round frees its predecessor's checkpoint blocks as soon as
-      // the new degree table is materialized (the transient-derived-
-      // state scale-bug pattern) — node-sized blocks now, not edge-sized
-      var prev = ckptRdd(deg)
+      // Each round's kill count is the ONE job that materializes the
+      // degree blocks (round 8 — an eager checkpoint followed by a
+      // separate isEmpty probe paid two scheduler round-trips per round),
+      // and doubles as the NEXT round's convergence check. Node-sized
+      // blocks per round, never edge-sized.
+      var (deg, nKill) = loop.converge(adj.groupBy(col("w").as("node"))
+        .agg(count(lit(1)).as("deg")))(killCount)
       var r = 1
       while (r <= rounds && nKill > 0) {
         val kill = deg.where(col("deg") < k).select(col("node"))
@@ -302,30 +262,22 @@ object Graphs {
             "left_semi")
           .groupBy(col("n").as("node"))
           .agg(count(lit(1)).as("lost"))
-        val deg2 = deg
+        val (deg2, nKill2) = loop.converge(deg
           .join(kill, Seq("node"), "left_anti")
           .join(loss, Seq("node"), "left_outer")
           .select(col("node"),
-            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg"))
-          .localCheckpoint(eager = false)
-        // materialize + next-round kill count, one job; the previous
-        // round's blocks (which this round's plan reads) are freed only
-        // after the new blocks exist
-        nKill = deg2.where(col("deg") < k).count()
-        prev.foreach(_.unpersist(blocking = false))
-        prev = ckptRdd(deg2)
+            (col("deg") - coalesce(col("lost"), lit(0L))).as("deg")))(
+          killCount)
         deg = deg2
+        nKill = nKill2
         r += 1
       }
       // deg = 0 survivors lost every edge without (yet) being killed —
       // they are not endpoints of any surviving edge, so they are absent
       // from the output exactly as under the edge-set formulation
-      val out = deg.where(col("deg") >= 1)
-        .select(col("node"), col("deg").as("core_deg"))
-        .localCheckpoint(eager = true)
-      prev.foreach(_.unpersist(blocking = false))
-      out
-    } finally adj.unpersist(blocking = false)
+      loop.output(deg.where(col("deg") >= 1)
+        .select(col("node"), col("deg").as("core_deg")))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -360,41 +312,33 @@ object Graphs {
     *         (a, b) not an edge */
   def linkPredict(spark: SparkSession, edges: DataFrame,
       maxPivotDegree: Long = 10000L, minCommon: Long = 1L): DataFrame = {
-    val e = canonicalUndirected(edges)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    RoundLoop.run() { loop =>
+      // the e subplan is referenced three times — uncached it would
+      // re-derive per reference (the round-4 subplan lesson)
+      val e = loop.cache(canonicalUndirected(edges))
       val deg = endpointDegrees(e)
       // adjacency restricted to pivots under the cap, with the pivot's
       // degree riding along for the RA contribution. adj feeds BOTH
       // sides of the wedge self-join — uncached, Spark executes the
       // union+degree-join derivation twice (subplans are not deduped;
-      // scale-bug pattern 1); the nested finally frees it exception or
-      // not (a failed job must not leak an edge-scale cache into a
-      // long-lived session)
-      val adj = e.select(col("u").as("w"), col("v").as("n"))
+      // scale-bug pattern 1)
+      val adj = loop.cache(e.select(col("u").as("w"), col("v").as("n"))
         .unionByName(e.select(col("v").as("w"), col("u").as("n")))
         .join(deg.select(col("node").as("w"), col("deg").as("degw")),
           Seq("w"))
-        .where(col("degw") <= maxPivotDegree)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        val a1 = adj.select(col("w"), col("n").as("a"), col("degw"))
-        val a2 = adj.select(col("w"), col("n").as("b"))
-        val scored = a1.join(a2, Seq("w"))
-          .where(col("a") < col("b"))
-          .groupBy("a", "b")
-          .agg(count(lit(1)).as("common"),
-            sum(expr("1000000 div degw")).as("ra_ppm"))
-          .where(col("common") >= minCommon)
-        // materialize before the finallys free the caches (the e
-        // subplan is referenced three times — uncached it would
-        // re-derive per reference, the round-4 subplan lesson)
-        scored.join(e,
-            scored("a") === e("u") && scored("b") === e("v"), "left_anti")
-          .select(col("a"), col("b"), col("common"), col("ra_ppm"))
-          .localCheckpoint(eager = true)
-      } finally adj.unpersist(blocking = false)
-    } finally e.unpersist(blocking = false)
+        .where(col("degw") <= maxPivotDegree))
+      val a1 = adj.select(col("w"), col("n").as("a"), col("degw"))
+      val a2 = adj.select(col("w"), col("n").as("b"))
+      val scored = a1.join(a2, Seq("w"))
+        .where(col("a") < col("b"))
+        .groupBy("a", "b")
+        .agg(count(lit(1)).as("common"),
+          sum(expr("1000000 div degw")).as("ra_ppm"))
+        .where(col("common") >= minCommon)
+      loop.output(scored.join(e,
+          scored("a") === e("u") && scored("b") === e("v"), "left_anti")
+        .select(col("a"), col("b"), col("common"), col("ra_ppm")))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -428,16 +372,13 @@ object Graphs {
   def labelPropagation(spark: SparkSession, edges: DataFrame,
       iters: Int = 4): DataFrame = {
     require(iters >= 1 && iters <= 32, s"iters=$iters out of [1,32]")
-    // key = v (the label-lookup join key), value = u (the adopter)
-    val sym = symmetricAdjacency(spark, edges, "v", "u")
-    try {
-      var labels = sym.select(col("u").as("node")).distinct()
+    RoundLoop.run() { loop =>
+      // key = v (the label-lookup join key), value = u (the adopter)
+      val sym = symmetricAdjacency(spark, loop, edges, "v", "u")
+      val labels0 = sym.select(col("u").as("node")).distinct()
         .select(col("node"), col("node").as("label"))
-      // same periodic lineage cut as fixpointRank (iterations past ~8
-      // nested rounds must not accumulate in one Catalyst plan)
-      var prevCut: Option[org.apache.spark.rdd.RDD[_]] = None
-      for (i <- 1 to iters) {
-        labels = sym
+      loop.output(loop.iterate(labels0, iters) { (labels, _) =>
+        sym
           .join(labels.withColumnRenamed("node", "v"), Seq("v"))
           .groupBy(col("u").as("node"), col("label"))
           .agg(count(lit(1)).as("cnt"))
@@ -445,17 +386,8 @@ object Graphs {
           .agg(min(struct((-col("cnt")).as("negCnt"),
             col("label").as("label"))).as("best"))
           .select(col("node"), col("best.label").as("label"))
-        if (i % 8 == 0 && i < iters) {
-          val cut = labels.localCheckpoint(eager = true)
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = ckptRdd(cut)
-          labels = cut
-        }
-      }
-      val out = labels.localCheckpoint(eager = true)
-      prevCut.foreach(_.unpersist(blocking = false))
-      out
-    } finally sym.unpersist(blocking = false)
+      })
+    }
   }
 
   // ------------------------------------------------------------------
@@ -483,10 +415,10 @@ object Graphs {
     * dist in {r−2, r−1, r} (undirected unit weights), so anti-joining
     * the last TWO frontiers is exactly "not yet settled" — the settled
     * set is never re-shuffled OR re-copied. Per-round frontiers are
-    * node-disjoint localCheckpoints, materialized by the same count job
-    * that decides exhaustion (kept alive until the end — they ARE the
-    * result); the output is their one final union, after which every
-    * round's blocks are freed. Total per-round work is
+    * node-disjoint checkpoints, materialized by the same count job that
+    * decides exhaustion (held until the end — they ARE the result); the
+    * output is their one final union, after which every round's blocks
+    * are freed. Total per-round work is
     * O(frontier edges), total work the edges within maxDepth hops of
     * the seeds, not maxDepth × |E| and not maxDepth × |reached|. An
     * exhausted frontier exits early (depth is a bound, not a quota).
@@ -499,13 +431,13 @@ object Graphs {
       seeds: DataFrame, maxDepth: Int): DataFrame = {
     require(maxDepth >= 1 && maxDepth <= 32,
       s"maxDepth=$maxDepth out of [1,32]")
-    val sym = symmetricAdjacency(spark, edges, "w", "n")
-    try {
-      val init = seeds.selectExpr("CAST(node AS BIGINT) AS node").distinct()
-        .join(sym.select(col("w").as("node")).distinct(),
-          Seq("node"), "left_semi")
-        .select(col("node"), lit(0L).as("dist"), col("node").as("seed"))
-        .localCheckpoint(eager = true)
+    RoundLoop.run() { loop =>
+      val sym = symmetricAdjacency(spark, loop, edges, "w", "n")
+      val init = loop.checkpoint(
+        seeds.selectExpr("CAST(node AS BIGINT) AS node").distinct()
+          .join(sym.select(col("w").as("node")).distinct(),
+            Seq("node"), "left_semi")
+          .select(col("node"), lit(0L).as("dist"), col("node").as("seed")))
       val frontiers = scala.collection.mutable.ArrayBuffer(init)
       var fPrev = init
       var fPrevPrev: Option[DataFrame] = None
@@ -528,11 +460,9 @@ object Graphs {
         // blocks and decides exhaustion (round 8 — eager checkpoint then
         // a separate isEmpty probe was two scheduler round-trips per
         // depth; guide §1.2)
-        val newFrontier = fresh.localCheckpoint(eager = false)
-        if (newFrontier.count() == 0L) {
-          exhausted = true
-          ckptRdd(newFrontier).foreach(_.unpersist(blocking = false))
-        } else {
+        val newFrontier = loop.checkpoint(fresh, eager = false)
+        if (newFrontier.count() == 0L) exhausted = true
+        else {
           frontiers += newFrontier
           fPrevPrev = Some(fPrev)
           fPrev = newFrontier
@@ -542,11 +472,8 @@ object Graphs {
       // one union of node-disjoint per-round frontiers = the settled
       // set; checkpointing IT is what lets every round's blocks be
       // freed now instead of backing the returned frame
-      val out = frontiers.reduce(_.unionByName(_))
-        .localCheckpoint(eager = true)
-      frontiers.foreach(f => ckptRdd(f).foreach(_.unpersist(blocking = false)))
-      out
-    } finally sym.unpersist(blocking = false)
+      loop.output(frontiers.reduce(_.unionByName(_)))
+    }
   }
 
   // ------------------------------------------------------------------
@@ -592,37 +519,37 @@ object Graphs {
   def randomWalks(spark: SparkSession, edges: DataFrame,
       starts: DataFrame, length: Int): DataFrame = {
     require(length >= 1 && length <= 32, s"length=$length out of [1,32]")
-    val adj = symmetricAdjacency(spark, edges, "w", "nxt")
-    try {
-      var walks = starts
-        .selectExpr("CAST(node AS BIGINT) AS walk")
-        .join(adj.select(col("w").as("walk")).distinct(),
-          Seq("walk"), "left_semi")
-        .select(col("walk"), col("walk").as("cur"),
-          col("walk").cast("string").as("path"))
-      var prevCut: Option[org.apache.spark.rdd.RDD[_]] = None
-      for (t <- 1 to length) {
-        walks = walks
-          .join(adj, walks("cur") === adj("w"))
-          .groupBy("walk", "path")
-          .agg(min(struct(
-            xxhash64(concat_ws(":", col("walk"), lit(t), col("nxt")))
-              .as("h"),
-            col("nxt").as("nxt"))).as("best"))
-          .select(col("walk"), col("best.nxt").as("cur"),
-            concat_ws(" ", col("path"), col("best.nxt")).as("path"))
-        if (t % 8 == 0 && t < length) {
-          val cut = walks.localCheckpoint(eager = true)
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = ckptRdd(cut)
-          walks = cut
-        }
-      }
-      val out = walks.select(col("walk"), col("path"))
-        .localCheckpoint(eager = true)
-      prevCut.foreach(_.unpersist(blocking = false))
-      out
-    } finally adj.unpersist(blocking = false)
+    RoundLoop.run() { loop =>
+      val adj = symmetricAdjacency(spark, loop, edges, "w", "nxt")
+      walkSteps(loop, adj, starts, length)(identity, t => struct(
+        xxhash64(concat_ws(":", col("walk"), lit(t), col("nxt"))).as("h"),
+        col("nxt").as("nxt")))
+    }
+  }
+
+  /** The step loop both walk operators share: walks start at the
+    * `starts` present in `adj` (w, nxt, ...); each step joins the walk
+    * frontier to its candidates, widens them with `candidates`, and moves
+    * every walk to the candidate minimizing `rule(t)` (a struct whose
+    * `nxt` field is the next node). The rule carries each operator's own
+    * hash key; iterations past 8 get the house lineage cut. */
+  private def walkSteps(loop: RoundLoop, adj: DataFrame, starts: DataFrame,
+      length: Int)(candidates: DataFrame => DataFrame,
+      rule: Int => Column): DataFrame = {
+    val walks0 = starts
+      .selectExpr("CAST(node AS BIGINT) AS walk")
+      .join(adj.select(col("w").as("walk")).distinct(),
+        Seq("walk"), "left_semi")
+      .select(col("walk"), col("walk").as("cur"),
+        col("walk").cast("string").as("path"))
+    val walks = loop.iterate(walks0, length) { (walks, t) =>
+      candidates(walks.join(adj, walks("cur") === adj("w")))
+        .groupBy("walk", "path")
+        .agg(min(rule(t)).as("best"))
+        .select(col("walk"), col("best.nxt").as("cur"),
+          concat_ws(" ", col("path"), col("best.nxt")).as("path"))
+    }
+    loop.output(walks.select(col("walk"), col("path")))
   }
 
   /** Weighted variant of [[randomWalks]]: the input is a MULTIGRAPH —
@@ -649,67 +576,45 @@ object Graphs {
   def weightedRandomWalks(spark: SparkSession, edges: DataFrame,
       starts: DataFrame, length: Int, maxWeight: Long = 1024L): DataFrame = {
     require(length >= 1 && length <= 32, s"length=$length out of [1,32]")
-    val wtd = edges
-      .selectExpr("CAST(src AS BIGINT) AS a", "CAST(dst AS BIGINT) AS b")
-      .where(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("u"),
-        greatest(col("a"), col("b")).as("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("wt"))
-    val adjRaw = wtd
-      .select(col("u").as("w"), col("v").as("nxt"), col("wt"))
-      .unionByName(wtd.select(col("v").as("w"), col("u").as("nxt"),
-        col("wt")))
-    // scale-adaptive partitioning for the cached adjacency (guide §2;
-    // see Partitioning) — ceiling-clamped, unchanged at corpus scale
-    val adj = adjRaw
-      .repartition(Partitioning.adaptiveParts(spark, adjRaw), col("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
+    RoundLoop.run() { loop =>
+      val wtd = edges
+        .selectExpr("CAST(src AS BIGINT) AS a", "CAST(dst AS BIGINT) AS b")
+        .where(col("a") =!= col("b"))
+        .select(least(col("a"), col("b")).as("u"),
+          greatest(col("a"), col("b")).as("v"))
+        .groupBy("u", "v").agg(count(lit(1)).as("wt"))
+      val adjRaw = wtd
+        .select(col("u").as("w"), col("v").as("nxt"), col("wt"))
+        .unionByName(wtd.select(col("v").as("w"), col("u").as("nxt"),
+          col("wt")))
+      // scale-adaptive partitioning for the cached adjacency (guide §2;
+      // see Partitioning) — ceiling-clamped, unchanged at corpus scale
+      val adj = loop.cache(adjRaw
+        .repartition(Partitioning.adaptiveParts(spark, adjRaw), col("w")))
       // an edge list that is EMPTY after the self-loop drop makes
       // max(wt) NULL — read defensively and return the empty walk set
       // (mirrors randomWalks' graceful empty-graph behavior) instead of
       // throwing an opaque NPE from getLong (round-7 advice)
       val heaviestRow = adj.agg(max(col("wt"))).head
       if (heaviestRow.isNullAt(0))
-        return adj.sparkSession.emptyDataFrame
+        adj.sparkSession.emptyDataFrame
           .select(lit(0L).as("walk"), lit("").as("path")).limit(0)
-      val heaviest = heaviestRow.getLong(0)
-      require(heaviest <= maxWeight,
-        s"max edge weight $heaviest exceeds maxWeight=$maxWeight — " +
-          "quantize or bucket weights upstream (the copy explode is " +
-          "linear in the weight)")
-      var walks = starts
-        .selectExpr("CAST(node AS BIGINT) AS walk")
-        .join(adj.select(col("w").as("walk")).distinct(),
-          Seq("walk"), "left_semi")
-        .select(col("walk"), col("walk").as("cur"),
-          col("walk").cast("string").as("path"))
-      var prevCut: Option[org.apache.spark.rdd.RDD[_]] = None
-      for (t <- 1 to length) {
-        walks = walks
-          .join(adj, walks("cur") === adj("w"))
-          .select(col("walk"), col("path"), col("nxt"),
-            explode(sequence(lit(1L), col("wt"))).as("copy"))
-          .groupBy("walk", "path")
-          .agg(min(struct(
+      else {
+        val heaviest = heaviestRow.getLong(0)
+        require(heaviest <= maxWeight,
+          s"max edge weight $heaviest exceeds maxWeight=$maxWeight — " +
+            "quantize or bucket weights upstream (the copy explode is " +
+            "linear in the weight)")
+        walkSteps(loop, adj, starts, length)(
+          _.select(col("walk"), col("path"), col("nxt"),
+            explode(sequence(lit(1L), col("wt"))).as("copy")),
+          t => struct(
             xxhash64(concat_ws(":", col("walk"), lit(t), col("nxt"),
               col("copy"))).as("h"),
             col("nxt").as("nxt"),
-            col("copy").as("copy"))).as("best"))
-          .select(col("walk"), col("best.nxt").as("cur"),
-            concat_ws(" ", col("path"), col("best.nxt")).as("path"))
-        if (t % 8 == 0 && t < length) {
-          val cut = walks.localCheckpoint(eager = true)
-          prevCut.foreach(_.unpersist(blocking = false))
-          prevCut = ckptRdd(cut)
-          walks = cut
-        }
+            col("copy").as("copy")))
       }
-      val out = walks.select(col("walk"), col("path"))
-        .localCheckpoint(eager = true)
-      prevCut.foreach(_.unpersist(blocking = false))
-      out
-    } finally adj.unpersist(blocking = false)
+    }
   }
 
   // ------------------------------------------------------------------
@@ -752,63 +657,55 @@ object Graphs {
     * @return (node BIGINT, deg BIGINT, tri BIGINT, lcc_ppm BIGINT) */
   def triangleStats(spark: SparkSession, edges: DataFrame,
       orientByDegree: Boolean = true): DataFrame = {
-    val e = canonicalUndirected(edges)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val deg = endpointDegrees(e)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      try {
-        // (degree, id) orientation key — struct comparison is
-        // lexicographic, exactly the order the correctness argument needs
-        def ord(d: Column, id: Column): Column = struct(d, id)
-        // id-mode reuses the whole wedge pipeline by making the ordering
-        // key degenerate: dy := y, so ord(dy, y) == (y, y) ≈ id order and
-        // the canonical u < v edges are already "oriented"
-        val oriented = (if (orientByDegree)
-          e.join(deg.select(col("node").as("u"), col("deg").as("du")),
-              Seq("u"))
-            .join(deg.select(col("node").as("v"), col("deg").as("dv")),
-              Seq("v"))
-            .select(
-              when(ord(col("du"), col("u")) < ord(col("dv"), col("v")),
-                struct(col("u").as("x"), col("v").as("y"),
-                  col("dv").as("dy")))
-                .otherwise(struct(col("v").as("x"), col("u").as("y"),
-                  col("du").as("dy")))
-                .as("o"))
-            .select(col("o.x").as("x"), col("o.y").as("y"),
-              col("o.dy").as("dy"))
-        else
-          e.select(col("u").as("x"), col("v").as("y"), col("v").as("dy")))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        try {
-          // wedges at pivot x: unordered pairs {y1, y2} taken in
-          // orientation order so the closing edge is oriented y1 → y2
-          val w1 = oriented.select(col("x"), col("y").as("y1"),
-            col("dy").as("d1"))
-          val w2 = oriented.select(col("x"), col("y").as("y2"),
-            col("dy").as("d2"))
-          val wedges = w1.join(w2, Seq("x"))
-            .where(ord(col("d1"), col("y1")) < ord(col("d2"), col("y2")))
-            .select(col("x"), col("y1"), col("y2"))
-          val closing = oriented
-            .select(col("x").as("y1"), col("y").as("y2"))
-          // tris is consumed exactly once (the explode below) — no persist
-          val tris = wedges.join(closing, Seq("y1", "y2"))
-          val perNode = tris
-            .select(explode(array(col("x"), col("y1"), col("y2")))
-              .as("node"))
-            .groupBy("node").agg(count(lit(1)).as("tri"))
-          val out = deg.join(perNode, Seq("node"), "left_outer")
-            .select(col("node"), col("deg"),
-              coalesce(col("tri"), lit(0L)).as("tri"))
-            .withColumn("lcc_ppm",
-              when(col("deg") >= 2,
-                expr("(2000000 * tri) div (deg * (deg - 1))"))
-                .otherwise(lit(0L)))
-          out.localCheckpoint(eager = true)
-        } finally oriented.unpersist(blocking = false)
-      } finally deg.unpersist(blocking = false)
-    } finally e.unpersist(blocking = false)
+    RoundLoop.run() { loop =>
+      val e = loop.cache(canonicalUndirected(edges))
+      val deg = loop.cache(endpointDegrees(e))
+      // (degree, id) orientation key — struct comparison is
+      // lexicographic, exactly the order the correctness argument needs
+      def ord(d: Column, id: Column): Column = struct(d, id)
+      // id-mode reuses the whole wedge pipeline by making the ordering
+      // key degenerate: dy := y, so ord(dy, y) == (y, y) ≈ id order and
+      // the canonical u < v edges are already "oriented"
+      val oriented = loop.cache(if (orientByDegree)
+        e.join(deg.select(col("node").as("u"), col("deg").as("du")),
+            Seq("u"))
+          .join(deg.select(col("node").as("v"), col("deg").as("dv")),
+            Seq("v"))
+          .select(
+            when(ord(col("du"), col("u")) < ord(col("dv"), col("v")),
+              struct(col("u").as("x"), col("v").as("y"),
+                col("dv").as("dy")))
+              .otherwise(struct(col("v").as("x"), col("u").as("y"),
+                col("du").as("dy")))
+              .as("o"))
+          .select(col("o.x").as("x"), col("o.y").as("y"),
+            col("o.dy").as("dy"))
+      else
+        e.select(col("u").as("x"), col("v").as("y"), col("v").as("dy")))
+      // wedges at pivot x: unordered pairs {y1, y2} taken in
+      // orientation order so the closing edge is oriented y1 → y2
+      val w1 = oriented.select(col("x"), col("y").as("y1"),
+        col("dy").as("d1"))
+      val w2 = oriented.select(col("x"), col("y").as("y2"),
+        col("dy").as("d2"))
+      val wedges = w1.join(w2, Seq("x"))
+        .where(ord(col("d1"), col("y1")) < ord(col("d2"), col("y2")))
+        .select(col("x"), col("y1"), col("y2"))
+      val closing = oriented
+        .select(col("x").as("y1"), col("y").as("y2"))
+      // tris is consumed exactly once (the explode below) — no persist
+      val tris = wedges.join(closing, Seq("y1", "y2"))
+      val perNode = tris
+        .select(explode(array(col("x"), col("y1"), col("y2")))
+          .as("node"))
+        .groupBy("node").agg(count(lit(1)).as("tri"))
+      loop.output(deg.join(perNode, Seq("node"), "left_outer")
+        .select(col("node"), col("deg"),
+          coalesce(col("tri"), lit(0L)).as("tri"))
+        .withColumn("lcc_ppm",
+          when(col("deg") >= 2,
+            expr("(2000000 * tri) div (deg * (deg - 1))"))
+            .otherwise(lit(0L))))
+    }
   }
 }

@@ -89,15 +89,16 @@ object KgPipeline {
 
   /** As `canonicalMap`, also returning the CC run handle so a caller that
     * fully consumes the map (e.g. `prepare`'s collect) can free the
-    * fixpoint's temp files immediately instead of at JVM shutdown. */
+    * fixpoint's final-round checkpoint blocks immediately instead of
+    * when the labels are GC'd. */
   def canonicalMapManaged(spark: SparkSession, entities: DataFrame,
       aliases: DataFrame, hugeEntities: Boolean = false)
       : (DataFrame, ConnectedComponents.CcHandle) = {
     val cc = ConnectedComponents.runManaged(spark, sameAsEdges(aliases))
     // `labeled` is referenced twice below (repIds and the final join) and
     // deliberately NOT persisted: cc.labels is backed by the fixpoint's
-    // final-round parquet, so each reference re-derives only a parquet
-    // scan + one dimension-sized join — NOT the CC fixpoint itself. A
+    // final-round checkpoint blocks, so each reference re-derives only a
+    // block scan + one dimension-sized join — NOT the CC fixpoint itself. A
     // persist here would have no sound unpersist point (the returned
     // DataFrame is lazy; consumers run after this method exits) and would
     // pin a dimension-sized cache entry per call in a long-lived driver.

@@ -21,9 +21,8 @@ object PipelineQueries {
     s.sparkContext.broadcast(KgPipeline.fixtureModel())
 
   /** Chain edges over a key column: k → k+1 within blocks of 50 — the
-    * q63 oracled topology. Shared with CcRoundsProbe so the probe's
-    * round counts always describe the topology the query actually
-    * ships. */
+    * q63 oracled topology. On q88's bridged variant below, the CC root
+    * update cuts the fixpoint from 22 to 7 rounds (BASELINE.md). */
   def chainEdges(c: DataFrame): DataFrame =
     c.where(col("k") % 50 =!= 49)
       .select(col("k").as("src"), (col("k") + 1).as("dst"))

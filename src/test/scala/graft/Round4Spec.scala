@@ -1,7 +1,8 @@
 package graft
 
 import graft.core.UnionFind
-import graft.operators.{ConnectedComponents, Dedup, Similarity}
+import graft.operators.{BpeSpark, ConnectedComponents, Dedup, Graphs,
+  Similarity}
 import graft.pipeline.FixtureSpark
 import graft.streaming.EventsStream
 import org.apache.spark.sql.functions._
@@ -11,7 +12,8 @@ import org.apache.spark.sql.functions._
   *     on adversarial shingle sets (the documented "equal up to a 64-bit
   *     collision" claim, pinned);
   *   - CcHandle.close() frees exactly its own run dir (two concurrent
-  *     managed fixpoints, driver-reuse lifecycle);
+  *     resumable fixpoints, driver-reuse lifecycle), and every round-loop
+  *     operator leaves only its output's blocks persisted;
   *   - bruteForceTopK/ivfTopK fail fast on a non-integral QUERIES id
   *     (the round-3 guard covered only the vectors side);
   *   - runToMemory(requireSingleBatch) rejects multi-batch consumption
@@ -91,21 +93,25 @@ class Round4Spec extends SparkTestBase {
       .map(_.getName).toSet
   }
 
+  /** A caller-owned checkpoint dir, named so ccTmpDirs() sees it. */
+  private def ccTmpDir(): java.io.File =
+    java.nio.file.Files.createTempDirectory("graft-cc").toFile
+
   test("durable CcHandle.close frees its own dir; a second live handle " +
       "survives") {
     import spark.implicits._
     val e1 = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst")
     val e2 = Seq((10L, 11L), (11L, 12L), (12L, 10L)).toDF("src", "dst")
     val before = ccTmpDirs()
-    val h1 = ConnectedComponents.runManaged(spark, e1, durable = true)
-    val dirs1 = ccTmpDirs() -- before
-    assert(dirs1.size == 1, s"expected one new run dir, got $dirs1")
-    val h2 = ConnectedComponents.runManaged(spark, e2, durable = true)
-    val dirs2 = ccTmpDirs() -- before -- dirs1
-    assert(dirs2.size == 1)
+    val (d1, d2) = (ccTmpDir(), ccTmpDir())
+    val h1 = ConnectedComponents.resumableRun(spark, e1, d1.getPath)
+    val h2 = ConnectedComponents.resumableRun(spark, e2, d2.getPath)
+    // each run keeps its rounds in its own dir and creates no other
+    assert((ccTmpDirs() -- before) == Set(d1.getName, d2.getName))
+    assert(Seq(d1, d2).forall(_.list().exists(_.startsWith("round_"))))
     h1.close()
     // h1's dir is gone, h2's remains — and h2's labels stay readable
-    assert((ccTmpDirs() -- before) == dirs2,
+    assert((ccTmpDirs() -- before) == Set(d2.getName),
       "close() must remove exactly the closed handle's dir")
     val got2 = h2.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
       .toMap
@@ -124,7 +130,8 @@ class Round4Spec extends SparkTestBase {
     val got = h.labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(ccTmpDirs() == before,
       "non-durable fixpoint must not touch the filesystem")
-    val hd = ConnectedComponents.runManaged(spark, edges, durable = true)
+    val hd = ConnectedComponents.resumableRun(spark, edges,
+      ccTmpDir().getPath)
     val want = hd.labels.collect().map(r => (r.getLong(0), r.getLong(1)))
       .toMap
     hd.close()
@@ -228,25 +235,87 @@ class Round4Spec extends SparkTestBase {
 
   // ---------------- CC fixpoint cache hygiene ----------------
 
+  /** Persisted-RDD ids created since `before`, polled until they settle
+    * on `want` (frees are non-blocking) or 10 s pass. */
+  private def newPersisted(before: Set[Int],
+      want: Set[Int] = Set.empty): Set[Int] = {
+    val deadline = System.nanoTime() + 10_000_000_000L
+    var got = persisted() -- before
+    while (got != want && System.nanoTime() < deadline) {
+      Thread.sleep(200)
+      got = persisted() -- before
+    }
+    got
+  }
+
+  private def persisted(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Id of the checkpoint RDD behind a result frame. */
+  private def backingId(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id
+    }.toSet
+
   /** The per-round step1/jump-table persists (added to keep the edge join
     * exactly-once per round — Spark does not dedupe common subplans) must
     * all be RELEASED by the time runManaged returns: a long-lived driver
-    * running many fixpoints must not accumulate cached blocks. `e` and the
-    * per-round caches unpersist with blocking=false, so poll briefly. */
+    * running many fixpoints must not accumulate cached blocks. The only
+    * RDD left is the final round's, until close(). */
   test("CC fixpoint releases every persisted RDD it created") {
     import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val before = persisted()
     val edges = (0L until 400L).filter(_ % 20 != 19)
       .map(k => (k, k + 1)).toDF("src", "dst")
     val h = ConnectedComponents.runManaged(spark, edges)
     assert(h.labels.count() == 400L)
+    val last = backingId(h.labels)
+    assert(last.size == 1)
+    assert(newPersisted(before, last) == last,
+      "only the final round may outlive runManaged")
     h.close()
-    val deadline = System.nanoTime() + 10_000_000_000L
-    var leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    while (leaked.nonEmpty && System.nanoTime() < deadline) {
-      Thread.sleep(200)
-      leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
-    }
+    val leaked = newPersisted(before)
     assert(leaked.isEmpty, s"fixpoint left cached RDDs behind: $leaked")
+  }
+
+  test("every round-loop operator leaves only its output's blocks " +
+      "persisted") {
+    import spark.implicits._
+    val edges = ((0L until 12L).map(k => (k, (k + 1) % 12)) ++
+      Seq((0L, 6L), (3L, 9L), (0L, 6L))).toDF("src", "dst")
+    val nodes = Seq(0L, 5L).toDF("node")
+    val docs = Seq((0L, "the quick brown fox jumps"),
+      (1L, "the quick brown fox jumped"), (2L, "something else entirely"))
+      .toDF("doc_id", "text")
+    val callers = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "pageRank" -> (() => Graphs.pageRank(spark, edges, iters = 9)),
+      "personalizedPageRank" -> (() =>
+        Graphs.personalizedPageRank(spark, edges, nodes, iters = 9)),
+      "kCore" -> (() => Graphs.kCore(spark, edges, k = 2L, rounds = 5)),
+      "labelPropagation" -> (() =>
+        Graphs.labelPropagation(spark, edges, iters = 9)),
+      "nearestSeeds" -> (() =>
+        Graphs.nearestSeeds(spark, edges, nodes, maxDepth = 3)),
+      "randomWalks" -> (() =>
+        Graphs.randomWalks(spark, edges, nodes, length = 9)),
+      "weightedRandomWalks" -> (() =>
+        Graphs.weightedRandomWalks(spark, edges, nodes, length = 9)),
+      "linkPredict" -> (() => Graphs.linkPredict(spark, edges)),
+      "triangleStats" -> (() => Graphs.triangleStats(spark, edges)),
+      "minhashNearDups" -> (() => Dedup.minhashNearDups(docs, "text",
+        "doc_id", k = 2, numHashes = 16, bands = 8, threshold = 0.3)))
+    for ((name, call) <- callers) {
+      val before = persisted()
+      val out = call()
+      val kept = backingId(out)
+      assert(kept.size == 1, s"$name: output not checkpoint-backed")
+      assert(newPersisted(before, kept) == kept,
+        s"$name left more than its output persisted")
+      assert(out.count() > 0L, s"$name: output not readable")
+    }
+    // the BPE trainer returns driver data: nothing may stay behind
+    val before = persisted()
+    assert(BpeSpark.trainMerges(docs, "text", nMerges = 3).nonEmpty)
+    assert(newPersisted(before).isEmpty, "trainMerges left RDDs behind")
   }
 }

@@ -782,7 +782,7 @@ class Round7Spec extends SparkTestBase {
     val edges = chainEdges(30)
     // phase 1: give up after 2 rounds — the abandoned run must leave its
     // last committed round in place (that is the point of resumability;
-    // a temp-dir durable run would have freed everything here)
+    // an in-memory run would have freed everything here)
     val ex = intercept[IllegalStateException] {
       graft.operators.ConnectedComponents
         .resumableRun(spark, edges, dir, maxIter = 2)

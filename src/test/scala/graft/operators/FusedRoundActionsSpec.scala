@@ -8,10 +8,14 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * probe in the driver-loop operators (CC fixpoint, k-core, multi-source
   * BFS): each round must issue exactly ONE action — a `count` over the
   * lazily-checkpointed round state — and never a separate
-  * eager-checkpoint-then-`isEmpty`/`count` pair. Asserted at the ACTION
-  * level (QueryExecutionListener) rather than the job level, because AQE
-  * stage materializations and broadcast builds contribute sub-jobs of
-  * their own; the action sequence is what the operator controls.
+  * eager-checkpoint-then-`isEmpty`/`count` pair. The fixed-iteration
+  * loops (pageRank/PPR, label propagation, both walks) are pinned too:
+  * one checkpoint per lineage cut plus the result's. Every loop's exact
+  * action sequence is pinned (each checkpoint, lazy or eager, reports a
+  * `localCheckpoint` action). Asserted at the ACTION level
+  * (QueryExecutionListener) rather than the job level, because AQE stage
+  * materializations and broadcast builds contribute sub-jobs of their
+  * own; the action sequence is what the operator controls.
   */
 class FusedRoundActionsSpec extends SparkTestBase {
 
@@ -58,6 +62,8 @@ class FusedRoundActionsSpec extends SparkTestBase {
     // count() this test itself runs on the (empty) result
     assert(actions.count(_ == "count") == 5,
       s"expected 5 count actions (init + 3 rounds + test), saw: $actions")
+    assert(actions == Seq.fill(5)(Seq("localCheckpoint", "count")).flatten,
+      s"saw: $actions")
   }
 
   test("CC fixpoint rounds fuse materialization with the convergence " +
@@ -81,6 +87,9 @@ class FusedRoundActionsSpec extends SparkTestBase {
     assert(actions.count(_ == "count") == rounds + 1,
       s"expected ${rounds + 1} count actions (edge gate + $rounds " +
         s"rounds), saw: $actions")
+    assert(actions == Seq("count", "localCheckpoint") ++
+      Seq.fill(rounds)(Seq("localCheckpoint", "count")).flatten,
+      s"saw: $actions")
   }
 
   test("nearestSeeds depths fuse frontier materialization with the " +
@@ -99,5 +108,62 @@ class FusedRoundActionsSpec extends SparkTestBase {
     // 3 depth counts + the final count() this test runs on the result
     assert(actions.count(_ == "count") == 4,
       s"expected 4 count actions (3 depths + test), saw: $actions")
+    assert(actions == "localCheckpoint" +:
+      Seq.fill(4)(Seq("localCheckpoint", "count")).flatten,
+      s"saw: $actions")
+  }
+
+  // ---------------- fixed-iteration loops: exact action sequences -------
+
+  /** A 12-ring with two chords, a self-loop and no dead ends. */
+  private val ring = (0L until 12L).map(k => (k, (k + 1) % 12)) ++
+    Seq((0L, 6L), (3L, 9L), (2L, 2L))
+
+  test("pageRank issues the seed-count probe and one result checkpoint") {
+    import spark.implicits._
+    val actions = recordActions {
+      Graphs.pageRank(spark, ring.toDF("src", "dst"), iters = 5)
+    }
+    assert(actions == Seq("count", "localCheckpoint"), s"saw: $actions")
+  }
+
+  test("personalizedPageRank past the round-8 cut: one checkpoint per cut") {
+    import spark.implicits._
+    val actions = recordActions {
+      Graphs.personalizedPageRank(spark, ring.toDF("src", "dst"),
+        Seq(0L, 5L).toDF("node"), iters = 9)
+    }
+    assert(actions == Seq("count", "localCheckpoint", "localCheckpoint"),
+      s"saw: $actions")
+  }
+
+  test("labelPropagation with iters = 9 cuts lineage once at round 8") {
+    import spark.implicits._
+    val actions = recordActions {
+      Graphs.labelPropagation(spark, ring.toDF("src", "dst"), iters = 9)
+    }
+    assert(actions == Seq("localCheckpoint", "localCheckpoint"),
+      s"saw: $actions")
+  }
+
+  test("randomWalks past the round-8 cut: one checkpoint per cut") {
+    import spark.implicits._
+    val actions = recordActions {
+      Graphs.randomWalks(spark, ring.toDF("src", "dst"),
+        Seq(0L, 4L, 7L).toDF("node"), length = 9)
+    }
+    assert(actions == Seq("localCheckpoint", "localCheckpoint"),
+      s"saw: $actions")
+  }
+
+  test("weightedRandomWalks: weight probe, then the walk's checkpoints") {
+    import spark.implicits._
+    val actions = recordActions {
+      Graphs.weightedRandomWalks(spark,
+        (ring ++ ring.take(3)).toDF("src", "dst"),
+        Seq(0L, 4L, 7L).toDF("node"), length = 9)
+    }
+    assert(actions == Seq("head", "localCheckpoint", "localCheckpoint"),
+      s"saw: $actions")
   }
 }

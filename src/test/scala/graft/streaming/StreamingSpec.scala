@@ -171,13 +171,16 @@ class StreamingSpec extends SparkTestBase {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val half1 = docs.where(col("doc_id") % 2 === 0)
     val half2 = docs.where(col("doc_id") % 2 =!= 0)
-    half1.write.mode("append").parquet(s"$tmp/docs")
+    // each append is ONE file (coalesce(1)): its part file stays hidden
+    // in _temporary until a single rename publishes it, so the running
+    // stream can never list half an append and split it over two triggers
+    half1.coalesce(1).write.mode("append").parquet(s"$tmp/docs")
     val q = DocsStream.heavyHittersStream(spark, s"$tmp/docs", None,
         capacity = 4096, nShards = 4)
       .writeStream.format("memory").queryName("hh_multi")
       .outputMode("update").start()
     q.processAllAvailable()
-    half2.write.mode("append").parquet(s"$tmp/docs")
+    half2.coalesce(1).write.mode("append").parquet(s"$tmp/docs")
     q.processAllAvailable()
     q.stop()
     val tbl = spark.table("hh_multi")
@@ -215,14 +218,15 @@ class StreamingSpec extends SparkTestBase {
     }.toDF("doc_id", "text", "lang", "source", "n_chars")
     val tmp = java.nio.file.Files.createTempDirectory("graftstream7").toString
     val capacity = 64
-    docs.where(col("doc_id") < 200)
+    // one file per append, as above: exactly one trigger per append
+    docs.where(col("doc_id") < 200).coalesce(1)
       .write.mode("append").parquet(s"$tmp/docs")
     val q = DocsStream.heavyHittersStream(spark, s"$tmp/docs", None,
         capacity = capacity, nShards = 2)
       .writeStream.format("memory").queryName("hh_evict")
       .outputMode("update").start()
     q.processAllAvailable()
-    docs.where(col("doc_id") >= 200)
+    docs.where(col("doc_id") >= 200).coalesce(1)
       .write.mode("append").parquet(s"$tmp/docs")
     q.processAllAvailable()
     q.stop()
