@@ -1,9 +1,10 @@
 package graft
 
 import graft.pipeline.FixtureSpark
+import graft.queries._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §3.3 + the builder prompt.
+/** Driver contract — see SURVEY.md §3.3.
   *
   * `queries` is the full operator surface (SURVEY.md §2): one named entry
   * per operator, reading the driver testdata under the given sf dir (or
@@ -11,6 +12,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * `oracleSql` carries the DuckDB-dialect equivalent for every
   * SQL-expressible query; column names/types and row order match the Spark
   * results exactly (see graft.queries.Q for the float-determinism rules).
+  * Omitted keys get the driver's weaker rows-only check (generated-input /
+  * fixpoint / signature ops — each of those has an exact ScalaTest spec
+  * instead).
+  *
+  * The registry is `domains`: each domain module defines a disjoint set of
+  * queries and the oracles of its own queries, and both maps are built
+  * once from them.
   */
 object SparkEntry {
 
@@ -23,37 +31,26 @@ object SparkEntry {
       FixtureSpark.entities(spark), FixtureSpark.aliases(spark)).toDF()
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.RelationalQueries.queries ++
-      graft.queries.EventQueries.queries ++
-      graft.queries.TextQueries.queries ++
-      graft.queries.EmbeddingQueries.queries ++
-      graft.queries.PipelineQueries.queries ++
-      graft.queries.ExtraQueries.queries ++
-      graft.queries.SourceQueries.queries ++
-      graft.queries.Round2Queries.queries ++
-      graft.queries.Round3Queries.queries ++
-      graft.queries.Round4Queries.queries ++
-      graft.queries.Round5Queries.queries ++
-      graft.queries.Round6Queries.queries ++
-      graft.queries.Round7Queries.queries
+  /** The registry; `DocCountsSpec` checks that no two domains define the
+    * same query key. */
+  val domains: Seq[QueryModule] = Seq(RelationalQueries, EventQueries,
+    TextQueries, SimilarityQueries, GraphQueries, PipelineQueries,
+    StreamingQueries)
 
-  /** DuckDB equivalents for every SQL-expressible query; omitted keys get
-    * the driver's weaker rows-only check (generated-input / fixpoint /
-    * signature ops — each of those has an exact ScalaTest spec instead). */
-  def oracleSql: Map[String, String] =
-    graft.queries.RelationalQueries.oracles ++
-      graft.queries.EventQueries.oracles ++
-      graft.queries.TextQueries.oracles ++
-      graft.queries.EmbeddingQueries.oracles ++
-      graft.queries.PipelineQueries.oracles ++
-      graft.queries.ExtraQueries.oracles ++
-      graft.queries.SourceQueries.oracles ++
-      graft.queries.Round2Queries.oracles ++
-      graft.queries.Round3Queries.oracles ++
-      graft.queries.Round4Queries.oracles ++
-      graft.queries.Round5Queries.oracles ++
-      graft.queries.Round6Queries.oracles ++
-      graft.queries.Round7Queries.oracles
+  /** One entry per implemented operator from SURVEY.md §2. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    domains.flatMap(_.queries).toMap
+
+  /** DuckDB equivalents for every SQL-expressible query. */
+  val oracleSql: Map[String, String] = domains.flatMap(_.oracles).toMap
+}
+
+/** One domain of the driver surface: its named queries, each reading the
+  * driver tables under the given sf dir, and the DuckDB oracle SQL of
+  * those of its queries that have one. */
+trait QueryModule {
+  type QFn = (SparkSession, String) => DataFrame
+
+  val queries: Map[String, QFn]
+  val oracles: Map[String, String]
 }

@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * to one primitive loop in the generated code and allocates nothing per
   * row, where the composable form — `aggregate(zip_with(a, b, _*_), ...)`
   * — materializes an intermediate 64-element array per row and carries
-  * three lambda evaluations. Measured honestly (ScalingProbe C): at this
+  * three lambda evaluations. Measured honestly: at this
   * benchmark's scale the join dominates and the two are comparable; the
   * native form is kept as the default for the zero-allocation property
   * and as the engine's reference implementation of a codegen'd Expression.

@@ -12,8 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * run many small driver-loop rounds against it. Pinning that state to
   * `spark.sql.shuffle.partitions` makes EVERY round launch stages that
   * wide no matter how small the graph is — and per-stage dispatch is the
-  * dominant cost of a driver loop (measured on the bench box via
-  * DispatchProbe: ~450 ms per one-shuffle job at 32 tasks/stage vs
+  * dominant cost of a driver loop (measured on the bench box,
+  * OPTIMIZATION_r08.md §1.2: ~450 ms per one-shuffle job at 32 tasks/stage vs
   * ~150 ms narrow, i.e. ~14 ms per task just to schedule it). AQE cannot
   * help here: it coalesces the REDUCE side of a shuffle, but a cached /
   * checkpointed RDD's partition count is fixed at materialization and
@@ -40,7 +40,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Partitioning {
 
   /** ~1 MiB of estimated input per cached-round-state partition: below
-    * this a task is dispatch-bound, not compute-bound (DispatchProbe). */
+    * this a task is dispatch-bound, not compute-bound
+    * (OPTIMIZATION_r08.md §1.2). */
   val TargetBytesPerPartition: Long = 1L << 20
 
   /** Partition count for repartition-and-cache of `df`, sized from its

@@ -25,7 +25,7 @@ object Similarity {
   /** The composable higher-order-function form (zip_with + aggregate).
     * Kept as the cross-check implementation; allocates an intermediate
     * array per row that the native expression avoids (measured comparable
-    * at bench scale — the join dominates there; see ScalingProbe C). */
+    * at bench scale — the join dominates there). */
   def cosineHof(a: Column, b: Column): Column = {
     val dot = aggregate(zip_with(a, b, (x, y) =>
       x.cast("double") * y.cast("double")), lit(0.0), (acc, v) => acc + v)
@@ -149,7 +149,7 @@ object Similarity {
     * 1 byte/component (Array[Byte] encodes as BinaryType — a flat byte
     * blob in tungsten rows and in parquet), vs 4 for the float32
     * embedding and 8 + ArrayData overhead for the ARRAY<BIGINT> form
-    * the HOF-based dot used to force (measured: SqMemProbe). A vector
+    * the HOF-based dot used to force (measured: BASELINE.md). A vector
     * whose norm is zero or incomputable (null vector / null component)
     * cannot be normalized and is excluded — pinned against the q108
     * oracle by the no-null-components probe in OracleAssumptions.
@@ -191,8 +191,8 @@ object Similarity {
     * (`Int8DotProduct`, a codegen'd Catalyst expression over BINARY —
     * one primitive loop, no per-row allocation). At 100 TB the point
     * is storage/bandwidth: codes are 1 byte/component, so an executor
-    * holds 4× more vectors than float32 (measured bytes/vector in
-    * SqMemProbe; recorded in BASELINE.md), and the integer dot is
+    * holds 4× more vectors than float32 (measured bytes/vector
+    * recorded in BASELINE.md), and the integer dot is
     * SIMD-friendly; because the score is an exact integer
     * (quantization is per-ROW float math only — no cross-row float
     * reductions), the ranking replays bit-exactly in DuckDB, so unlike

@@ -99,18 +99,8 @@ object Icebergish {
     val todo = pagesAll.join(broadcast(done), Seq("bucket"), "left_anti")
     val todoPages = todo.select("url", "warc_ts", "html", "text", "lang")
       .as[Page]
-    def mark(name: String, since: Long): Long = {
-      if (sys.env.contains("GRAFT_BENCH_VERBOSE")) {
-        // scalastyle:off println
-        println(f"[phase] $name%-14s ${(System.nanoTime() - since) / 1e9}%.2f s")
-        // scalastyle:on println
-      }
-      System.nanoTime()
-    }
-    var t = t0
     // count on the partition column only — no html bytes read
     val nPages = todo.select("bucket").count()
-    t = mark("resume-count", t)
     if (nPages == 0) return 0L
     // The OUTPUT modulus must match the pages table's ingestion-time
     // bucketing: triples inherit their page's bucket by recomputing
@@ -137,13 +127,10 @@ object Icebergish {
     // line up one-to-one
     val prep = prepared.getOrElse(KgPipeline.prepare(spark, entities, aliases))
     val triples = KgPipeline.run(spark, todoPages, prep)
-    val prepDone = mark("prepare", t)
-    t = prepDone
     // triples are bucket-local (same url hash as their page, and the pages
     // scan is bucket-partitioned) → the write needs NO shuffle
     val out = withBucket(triples.toDF(), numBuckets)
     writeColocated(out, s"$outDir/triples")
-    t = mark("map+write", t)
 
     val wallMs = (System.nanoTime() - t0) / 1000000L
     // Iceberg-style manifest stats FROM STORAGE, not by re-computing the
@@ -184,7 +171,6 @@ object Icebergish {
         coalesce(col("rows"), lit(0L)).as("rows"),
         coalesce(col("bytes"), lit(0L)).as("bytes"))
     appendManifest(spark, outDir, "triples", withEmpty, runId, wallMs)
-    t = mark("manifest", t)
     nPages
   }
 }

@@ -1,19 +1,18 @@
 package graft.queries
 
 import graft.sources.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Streaming-analog operators on the `events` table (SURVEY.md §2.9):
-  * tumbling / sliding / session windows, JSON props parsing, dedup,
+  * tumbling / sliding / session windows (the lag-gap-cumsum idiom and
+  * Spark's native session_window), JSON props parsing, dedup,
   * watermark-style high-water filtering. The pipeline itself is resumable
-  * batch (north_rule), so these run as batch queries; a true Structured
-  * Streaming demo lives in graft.streaming and its spec.
+  * batch (north_rule), so these run as batch queries; the true Structured
+  * Streaming operators are in StreamingQueries.
   */
-object EventQueries {
-  type QFn = (SparkSession, String) => DataFrame
+object EventQueries extends graft.QueryModule {
 
   val queries: Map[String, QFn] = Map(
     "q30_json_extract" -> ((s, d) =>
@@ -88,7 +87,16 @@ object EventQueries {
         .where(col("ts") >= col("hw") - expr("INTERVAL 24 HOURS"))
         .groupBy("event_type").agg(count(lit(1)).as("n"))
         .orderBy("event_type")
-    })
+    }),
+
+    "q68_session_window_native" -> ((s, d) =>
+      events(s, d)
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(count(lit(1)).as("n_events"))
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("n_sessions"),
+          max(col("n_events")).as("max_session_events"))
+        .orderBy("user_id"))
   )
 
   val oracles: Map[String, String] = Map(
@@ -143,6 +151,28 @@ object EventQueries {
     "q36_watermark_filter" ->
       """SELECT event_type, COUNT(*) AS n FROM events
         |WHERE ts >= (SELECT MAX(ts) FROM events) - INTERVAL 24 HOUR
-        |GROUP BY event_type ORDER BY event_type""".stripMargin
+        |GROUP BY event_type ORDER BY event_type""".stripMargin,
+
+    // Spark session_window: a new session starts when the gap since the
+    // previous event is >= the gap duration
+    "q68_session_window_native" ->
+      """WITH g AS (
+        |  SELECT user_id, ts, event_id,
+        |    CASE WHEN LAG(ts) OVER w IS NULL
+        |      OR epoch(ts) - epoch(LAG(ts) OVER w) >= 1800
+        |    THEN 1 ELSE 0 END AS new_sess
+        |  FROM events WINDOW w AS (PARTITION BY user_id
+        |    ORDER BY ts ASC, event_id ASC)),
+        |s AS (
+        |  SELECT user_id,
+        |    SUM(new_sess) OVER (PARTITION BY user_id
+        |      ORDER BY ts ASC, event_id ASC
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sess_id
+        |  FROM g),
+        |per AS (SELECT user_id, sess_id, COUNT(*) AS n_events
+        |  FROM s GROUP BY user_id, sess_id)
+        |SELECT user_id, COUNT(*) AS n_sessions,
+        |  MAX(n_events) AS max_session_events
+        |FROM per GROUP BY user_id ORDER BY user_id""".stripMargin
   )
 }

@@ -1,20 +1,45 @@
 package graft.queries
 
-import graft.operators.{ConnectedComponents, Dedup, Graphs}
+import graft.operators.{ConnectedComponents, Graphs}
 import graft.sources.Tables._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-7 additions: the dedup ACTION a curation pipeline actually runs.
-  * Rounds 3–6 built the pair detectors (q44/q45/q46/q106); q109 composes
-  * the containment pairs with the CC fixpoint into duplicate CLUSTERS and
-  * elects a canonical survivor per cluster — the "drop all but one"
-  * operator, where transitivity matters because near-dup relations chain
-  * (A quotes B, B quotes C: one cluster, one survivor, even when (A, C)
-  * itself scores below threshold).
+/** Graph operators over deterministic graphs derived arithmetically from
+  * the customer keys: connected components (q63 chains, q88 bridged
+  * chains), fixed-point PageRank and personalized PageRank, triangle
+  * counts, link prediction, k-core, label propagation, random and
+  * weighted walks, skip-gram pairs and nearest-seed BFS. Every query is
+  * hash-oracled: each oracle replays the same edge arithmetic in DuckDB
+  * and the operator round by round (or closes it WITH RECURSIVE).
   */
-object Round7Queries {
-  type QFn = (SparkSession, String) => DataFrame
+object GraphQueries extends graft.QueryModule {
+
+  /** The customer keys as a `k` column: the node set every graph query
+    * derives its edges from, by pure key arithmetic that the oracles
+    * replay on the same table. */
+  private def custKeys(s: SparkSession, d: String): DataFrame =
+    customer(s, d).select(col("c_custkey").cast("long").as("k"))
+
+  /** Chain edges over a key column: k → k+1 within blocks of 50 — the
+    * q63 oracled topology. On q88's bridged variant below, the CC root
+    * update cuts the fixpoint from 22 to 7 rounds (BASELINE.md). */
+  private def chainEdges(c: DataFrame): DataFrame =
+    c.where(col("k") % 50 =!= 49)
+      .select(col("k").as("src"), (col("k") + 1).as("dst"))
+
+  /** q88's bridged topology: chains plus three bridge families fusing
+    * chains per 250-block, so two labels race into one component (merge
+    * contention) while staying DuckDB WITH RECURSIVE-closable. */
+  private def bridgedChainEdges(c: DataFrame): DataFrame = {
+    val b1 = c.where(col("k") % 250 === 0)
+      .select(col("k").as("src"), (col("k") + 50).as("dst"))
+    val b2 = c.where(col("k") % 250 === 10)
+      .select(col("k").as("src"), (col("k") + 110).as("dst"))
+    val b3 = c.where(col("k") % 250 === 75)
+      .select(col("k").as("src"), (col("k") + 50).as("dst"))
+    chainEdges(c).unionByName(b1).unionByName(b2).unionByName(b3)
+  }
 
   /** Deterministic web-ish digraph over the customer keys, for q110:
     * chain edges k → k+1 within 50-blocks (the q63 topology) plus hub
@@ -22,13 +47,13 @@ object Round7Queries {
     * in-degree ~99 (popular-page skew); node 0 and the past-the-end
     * chain dst are DANGLING (no out-edges), exercising the leak term.
     * Pure key arithmetic on both sides — no data-dependent constants. */
-  def prEdges(c: DataFrame): DataFrame = {
-    val chain = c.where(col("k") % 50 =!= 49)
-      .select(col("k").as("src"), (col("k") + 1).as("dst"))
-    val hub = c.where(col("k") % 100 =!= 0)
+  private def prEdges(c: DataFrame): DataFrame =
+    chainEdges(c).unionByName(hubEdges(c))
+
+  /** The hub edges k → (k div 100)·100 of the q110 and q111 graphs. */
+  private def hubEdges(c: DataFrame): DataFrame =
+    c.where(col("k") % 100 =!= 0)
       .select(col("k").as("src"), expr("(k div 100) * 100").as("dst"))
-    chain.unionByName(hub)
-  }
 
   /** Deterministic triangle-rich undirected graph for q111: within
     * 30-blocks k—k+1 and k—k+2 (chain triangles), plus the same hub
@@ -36,14 +61,12 @@ object Round7Queries {
     * consecutive pair in its block, giving it degree ~99 and ~96
     * triangles (the hub-skew case the degree-ordered orientation is
     * for). */
-  def triEdges(c: DataFrame): DataFrame = {
+  private def triEdges(c: DataFrame): DataFrame = {
     val e1 = c.where(col("k") % 30 =!= 29)
       .select(col("k").as("src"), (col("k") + 1).as("dst"))
     val e2 = c.where(col("k") % 30 < 28)
       .select(col("k").as("src"), (col("k") + 2).as("dst"))
-    val hub = c.where(col("k") % 100 =!= 0)
-      .select(col("k").as("src"), expr("(k div 100) * 100").as("dst"))
-    e1.unionByName(e2).unionByName(hub)
+    e1.unionByName(e2).unionByName(hubEdges(c))
   }
 
   /** Deterministic community-structured graph for q113: dense 20-blocks
@@ -51,7 +74,7 @@ object Round7Queries {
     * (k ≡ 0 mod 100 → k—k+30, reaching into the next block). LPA should
     * collapse each dense block to one label while the bridges give the
     * tie-break rule real work at the block boundaries. */
-  def lpaEdges(c: DataFrame): DataFrame = {
+  private def lpaEdges(c: DataFrame): DataFrame = {
     val e1 = c.where(col("k") % 20 =!= 19)
       .select(col("k").as("src"), (col("k") + 1).as("dst"))
     val e2 = c.where(col("k") % 20 < 18)
@@ -67,7 +90,7 @@ object Round7Queries {
     * even-block fringes peel away over a 12-round cascade — measured at
     * the sf dirs: 12 rounds to fixpoint, ~50% survivors, min surviving
     * degree exactly 5 (the q115 OracleAssumptions pin replays this). */
-  def kcoreEdges(c: DataFrame): DataFrame = {
+  private def kcoreEdges(c: DataFrame): DataFrame = {
     val dense = c.where(expr("(k div 100) % 2 = 0"))
     triEdges(c)
       .unionByName(dense.where(col("k") % 30 < 27)
@@ -89,38 +112,32 @@ object Round7Queries {
       Seq(keyCol))
 
   val queries: Map[String, QFn] = Map(
-    // Containment-dedup clusters: q106's pairs as edges → connected
-    // components (the q63 fixpoint operator — double pointer-jump,
-    // map-side-combined neighbor-min, lineage-cut rounds) → per-cluster
-    // canonical = min doc_id (exactly the CC label), keep = is-canonical,
-    // csize = cluster population. Docs in NO pair are absent: they are
-    // implicitly kept, and at corpus scale materializing "not a dup" for
-    // 10^12 docs would dwarf the dup set itself. Both building blocks
-    // are independently hash-oracled (q106 pairs, q63/q88 closure), and
-    // the composition is oracled end-to-end here via the pair CTEs +
-    // WITH RECURSIVE closure.
-    "q109_containment_clusters" -> ((s, d) => {
-      val pairs = Dedup.containmentPairs(documents(s, d), "text",
-        "doc_id", "source", k = 3, threshold = 0.10)
-      // smallGraphThreshold: a dup-PAIR graph is usually tiny even when
-      // the corpus is not — when the measured edge/node counts come in
-      // under 1M the operator runs its own UnionFind oracle on the
-      // driver (bit-identical labels, ~32 MB bound) instead of paying
-      // ~10 job dispatches of distributed fixpoint on a toy graph; a
-      // bigger dup graph automatically takes the distributed path.
-      // runManaged (not run): the final-round blocks are freed as soon
-      // as the projected result is materialized, so repeated executions
-      // in one session (bench warm-up + timed pass) cannot accumulate
-      // block-manager storage (round-7 advice).
-      val handle = ConnectedComponents.runManaged(s,
-        pairs.select(col("a").as("src"), col("b").as("dst")),
-        smallGraphThreshold = 1L << 20)
-      val out = withGroupSize(handle.labels, "comp")
-        .select(col("node").as("doc_id"), col("comp").as("canon"),
-          (col("node") === col("comp")).as("keep"), col("csize"))
-        .localCheckpoint(eager = true)
-      handle.close()
-      out.orderBy("doc_id")
+    "q63_connected_components" -> ((s, d) => {
+      // edges DERIVED from the sf-dir customer table (chains of 50 within
+      // c_custkey blocks) so DuckDB's WITH RECURSIVE closure can verify the
+      // distributed fixpoint end-to-end — the full per-node labeling, not a
+      // histogram. Chain length 50 forces ~log2(50) pointer-jump rounds;
+      // the hub-degree-2000 fixture case stays covered by OperatorsSpec.
+      val c = custKeys(s, d)
+      ConnectedComponents.run(s, chainEdges(c))
+        .select(col("node"), col("comp"))
+        .orderBy("node")
+    }),
+
+    "q88_cc_bridged" -> ((s, d) => {
+      // q63's oracled topology is the friendliest case (disjoint chains:
+      // pointer-jump depth, no merges). This variant adds cross-links so
+      // the HASH-CHECKED path also exercises label-merge contention —
+      // three chains fused per 250-block, with block m+2 receiving two
+      // racing labels (block m's min via one bridge, block m+1's via
+      // another) — while staying WITH RECURSIVE-closable in DuckDB
+      // (components ≤ 150 nodes). dst endpoints are pure arithmetic on
+      // the src key, identical on both sides, so node-set parity holds
+      // even past the max customer key.
+      val c = custKeys(s, d)
+      ConnectedComponents.run(s, bridgedChainEdges(c))
+        .select(col("node"), col("comp"))
+        .orderBy("node")
     }),
 
     // Fixed-point integer PageRank (entity importance over the KG link
@@ -129,7 +146,7 @@ object Round7Queries {
     // hash-oracles (see Graphs.pageRank's scaladoc for the regime
     // argument). Graph derived arithmetically from customer keys.
     "q110_pagerank" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       Graphs.pageRank(s, prEdges(c), iters = 5)
         .orderBy("node")
     }),
@@ -139,7 +156,7 @@ object Round7Queries {
     // enumerates id-ordered; orientation invariance makes the counts
     // identical.
     "q111_triangles" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       Graphs.triangleStats(s, triEdges(c))
         .orderBy("node")
     }),
@@ -152,11 +169,22 @@ object Round7Queries {
     // it must not change m or any rank. Same fixed-point integer
     // regime as q110; the oracle's rounds are loop-generated too.
     "q112_personalized_pagerank" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       val seeds = c.where(col("k") % 100 === 0)
         .select(col("k").as("node"))
         .unionByName(c.select((max(col("k")) + 7).as("node")))
       Graphs.personalizedPageRank(s, prEdges(c), seeds, iters = 5)
+        .orderBy("node")
+    }),
+
+    // Synchronous label-propagation communities (deterministic
+    // min-tie-break) on a community-structured graph — 4 iterations,
+    // label = adopted community id, csize = community population.
+    "q113_label_propagation" -> ((s, d) => {
+      val c = custKeys(s, d)
+      val lbl = Graphs.labelPropagation(s, lpaEdges(c), iters = 4)
+      withGroupSize(lbl, "label")
+        .select(col("node"), col("label"), col("csize"))
         .orderBy("node")
     }),
 
@@ -166,7 +194,7 @@ object Round7Queries {
     // excluded as pivots, chain nodes survive — so the oracle exercises
     // the cap semantics, not just the happy path.
     "q114_link_prediction" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       Graphs.linkPredict(s, triEdges(c), maxPivotDegree = 50L,
           minCommon = 1L)
         .orderBy("a", "b")
@@ -180,19 +208,8 @@ object Round7Queries {
     // 12 rounds, so the hash compares the full cascade, not just the
     // converged core.
     "q115_kcore" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       Graphs.kCore(s, kcoreEdges(c), k = 5L, rounds = 12)
-        .orderBy("node")
-    }),
-
-    // Synchronous label-propagation communities (deterministic
-    // min-tie-break) on a community-structured graph — 4 iterations,
-    // label = adopted community id, csize = community population.
-    "q113_label_propagation" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
-      val lbl = Graphs.labelPropagation(s, lpaEdges(c), iters = 4)
-      withGroupSize(lbl, "label")
-        .select(col("node"), col("label"), col("csize"))
         .orderBy("node")
     }),
 
@@ -203,7 +220,7 @@ object Round7Queries {
     // and the whole thing hash-oracles (the oracle replays XXH64
     // bit-exactly per step via XxHash64Sql.hashCtes).
     "q116_random_walks" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       val starts = c.where(col("k") % 7 === 0).select(col("k").as("node"))
       Graphs.randomWalks(s, triEdges(c), starts, length = 4)
         .orderBy("walk")
@@ -217,7 +234,7 @@ object Round7Queries {
     // straight from the per-step walk CTEs, a structurally different
     // derivation of the same positions.
     "q117_skipgram_pairs" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       val starts = c.where(col("k") % 7 === 0).select(col("k").as("node"))
       val walks = Graphs.randomWalks(s, triEdges(c), starts, length = 4)
       // (center, context) pairs generated PER ROW with bounded-offset
@@ -251,7 +268,7 @@ object Round7Queries {
     // complement" rule); the frontier-delta iteration means each round
     // touches only newly-reached nodes' edges.
     "q118_nearest_seed" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       val seeds = c.where(col("k") % 100 === 0).select(col("k").as("node"))
       Graphs.nearestSeeds(s, lpaEdges(c), seeds, maxDepth = 4)
         .orderBy("node")
@@ -263,22 +280,13 @@ object Round7Queries {
     // exist and the copy-explode choice rule is exercised, not just
     // reduced to q116. 3 steps from the k%11==0 starts.
     "q119_weighted_walks" -> ((s, d) => {
-      val c = customer(s, d).select(col("c_custkey").cast("long").as("k"))
+      val c = custKeys(s, d)
       val starts = c.where(col("k") % 11 === 0).select(col("k").as("node"))
       Graphs.weightedRandomWalks(s, triEdges(c), starts, length = 3)
         .orderBy("walk")
-    }))
+    })
+  )
 
-  /** Unrolled SQL replay of Graphs.pageRank — generated from the SAME
-    * iteration count the query passes, so the oracle cannot drift from
-    * the Spark side's `iters`. Every arithmetic step mirrors the
-    * operator exactly: BIGINT ranks, `//` (= Spark's `div` on the
-    * non-negative domain), init/base from a scalar params CTE. Each
-    * round CTE is MATERIALIZED — r{k} is referenced twice by r{k+1}
-    * (the inflow subquery and nothing else, but DuckDB's inlining of a
-    * 5-deep CTE chain re-plans the whole prefix per level without the
-    * barrier; the q71 lesson). SUMs are CAST back to BIGINT because
-    * DuckDB widens SUM(BIGINT) to HUGEINT. */
   /** Shared CTE prefix for the q110/q112 oracles: the derived web-ish
     * digraph (mirrors prEdges) down to its node set. */
   private val prGraphSql: String =
@@ -293,6 +301,17 @@ object Round7Queries {
       |  SELECT src, CAST(COUNT(*) AS BIGINT) AS outdeg FROM e GROUP BY src),
       |nodes AS MATERIALIZED (
       |  SELECT src AS node FROM e UNION SELECT dst FROM e)""".stripMargin
+
+  /** Unrolled SQL replay of Graphs.pageRank — generated from the SAME
+    * iteration count the query passes, so the oracle cannot drift from
+    * the Spark side's `iters`. Every arithmetic step mirrors the
+    * operator exactly: BIGINT ranks, `//` (= Spark's `div` on the
+    * non-negative domain), init/base from a scalar params CTE. Each
+    * round CTE is MATERIALIZED — r{k} is referenced twice by r{k+1}
+    * (the inflow subquery and nothing else, but DuckDB's inlining of a
+    * 5-deep CTE chain re-plans the whole prefix per level without the
+    * barrier; the q71 lesson). SUMs are CAST back to BIGINT because
+    * DuckDB widens SUM(BIGINT) to HUGEINT. */
 
   private def pageRankOracleSql(iters: Int, scale: Long): String = {
     val rounds = (1 to iters).map { k =>
@@ -552,65 +571,50 @@ object Round7Queries {
        |$steps""".stripMargin
   }
 
+  /** The CC fixpoints are oracled by a recursive reachability closure
+    * over the same derived edge set (SURVEY.md §2.f). The closure
+    * materializes Σ size² pairs per component — fine for the 50-node
+    * blocks here; the distributed fixpoint itself is O(E log n). */
   val oracles: Map[String, String] = Map(
+    "q63_connected_components" ->
+      """WITH RECURSIVE
+        |edges AS (SELECT c_custkey AS src, c_custkey + 1 AS dst
+        |          FROM customer WHERE c_custkey % 50 <> 49),
+        |sym AS (SELECT src AS u, dst AS v FROM edges
+        |        UNION SELECT dst AS u, src AS v FROM edges),
+        |nodes AS (SELECT DISTINCT u AS node FROM sym),
+        |reach(node, r) AS (
+        |  SELECT node, node FROM nodes
+        |  UNION
+        |  SELECT s.u, rr.r FROM sym s JOIN reach rr ON s.v = rr.node
+        |)
+        |SELECT node, MIN(r) AS comp FROM reach
+        |GROUP BY node ORDER BY node""".stripMargin,
+
+    "q88_cc_bridged" ->
+      """WITH RECURSIVE
+        |ch AS (SELECT c_custkey AS src, c_custkey + 1 AS dst
+        |       FROM customer WHERE c_custkey % 50 <> 49),
+        |b1 AS (SELECT c_custkey AS src, c_custkey + 50 AS dst
+        |       FROM customer WHERE c_custkey % 250 = 0),
+        |b2 AS (SELECT c_custkey AS src, c_custkey + 110 AS dst
+        |       FROM customer WHERE c_custkey % 250 = 10),
+        |b3 AS (SELECT c_custkey AS src, c_custkey + 50 AS dst
+        |       FROM customer WHERE c_custkey % 250 = 75),
+        |edges AS (SELECT * FROM ch UNION ALL SELECT * FROM b1
+        |          UNION ALL SELECT * FROM b2 UNION ALL SELECT * FROM b3),
+        |sym AS (SELECT src AS u, dst AS v FROM edges
+        |        UNION SELECT dst AS u, src AS v FROM edges),
+        |nodes AS (SELECT DISTINCT u AS node FROM sym),
+        |reach(node, r) AS (
+        |  SELECT node, node FROM nodes
+        |  UNION
+        |  SELECT s.u, rr.r FROM sym s JOIN reach rr ON s.v = rr.node
+        |)
+        |SELECT node, MIN(r) AS comp FROM reach
+        |GROUP BY node ORDER BY node""".stripMargin,
+
     "q110_pagerank" -> pageRankOracleSql(iters = 5, scale = 1000000000000L),
-    "q116_random_walks" ->
-      s"""WITH
-         |${walkCtesSql(4)}
-         |SELECT walk, path FROM w4 ORDER BY walk""".stripMargin,
-
-    // q117: positions come from the per-step walk CTEs (cur at step t),
-    // NOT from re-parsing the path string the Spark side splits — a
-    // structurally different derivation of the same sequence.
-    "q117_skipgram_pairs" ->
-      s"""WITH
-         |${walkCtesSql(4)},
-         |pos AS MATERIALIZED (
-         |${(0 to 4).map(t =>
-              s"  SELECT walk, $t AS pos, cur FROM w$t")
-             .mkString("\n  UNION ALL\n")}),
-         |pr AS (
-         |  SELECT p1.cur AS center, p2.cur AS context
-         |  FROM pos p1 JOIN pos p2 ON p1.walk = p2.walk
-         |    AND p2.pos <> p1.pos AND abs(p2.pos - p1.pos) <= 2)
-         |SELECT center, context, CAST(COUNT(*) AS BIGINT) AS cnt
-         |FROM pr GROUP BY 1, 2 ORDER BY center, context""".stripMargin,
-    "q112_personalized_pagerank" ->
-      pprOracleSql(iters = 5, scale = 1000000000000L),
-    "q113_label_propagation" -> lpaOracleSql(iters = 4),
-    "q118_nearest_seed" -> nearestSeedOracleSql(depth = 4),
-    "q119_weighted_walks" ->
-      s"""WITH
-         |${walkCtesSql(3, weighted = true, startsMod = 11)}
-         |SELECT walk, path FROM w3 ORDER BY walk""".stripMargin,
-    "q115_kcore" -> kcoreOracleSql(k = 5L, rounds = 12),
-
-    // q114: the q111 graph's canonical edges → capped adjacency →
-    // pivot self-join → NOT EXISTS anti-check. All-integer scoring
-    // (1000000 // deg sums exactly), mirroring linkPredict line by
-    // line.
-    "q114_link_prediction" ->
-      s"""WITH
-        |${triGraphSql()},
-        |deg AS (
-        |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
-        |    SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-        |  GROUP BY node),
-        |adj AS MATERIALIZED (
-        |  SELECT s.w, s.n, d.deg AS degw FROM (
-        |    SELECT u AS w, v AS n FROM e
-        |    UNION ALL SELECT v AS w, u AS n FROM e) s
-        |  JOIN deg d ON s.w = d.node
-        |  WHERE d.deg <= 50),
-        |sc AS MATERIALIZED (
-        |  SELECT l.n AS a, r.n AS b, CAST(COUNT(*) AS BIGINT) AS common,
-        |    CAST(SUM(1000000 // l.degw) AS BIGINT) AS ra_ppm
-        |  FROM adj l JOIN adj r ON l.w = r.w AND l.n < r.n
-        |  GROUP BY 1, 2)
-        |SELECT a, b, common, ra_ppm FROM sc
-        |WHERE common >= 1 AND NOT EXISTS (
-        |  SELECT 1 FROM e WHERE e.u = sc.a AND e.v = sc.b)
-        |ORDER BY a, b""".stripMargin,
 
     // Id-ordered triangle enumeration (a < b < c, three edge probes) —
     // a completely different join tree from the Spark side's
@@ -643,42 +647,67 @@ object Round7Queries {
         |FROM deg d LEFT JOIN pernode p ON d.node = p.node
         |ORDER BY d.node""".stripMargin,
 
-    // q106's candidate CTEs (same shingle/containment replay), then the
-    // q63-style WITH RECURSIVE min-label closure over the pair edges.
-    // The expensive CTEs are MATERIALIZED: DuckDB re-evaluates inlined
-    // CTEs on every reference, and `sym` is referenced once per
-    // RECURSION STEP — without the barrier the whole shingle self-join
-    // would replay each iteration (the q71 CTE-explosion lesson).
-    "q109_containment_clusters" ->
-      """WITH RECURSIVE
-        |sh AS MATERIALIZED (
-        |  SELECT doc_id, source, list_distinct([
-        |    array_to_string(words[i:i+2], ' ')
-        |    FOR i IN range(1, greatest(len(words) - 2, 1) + 1)]) AS shingles
-        |  FROM (SELECT doc_id, source, string_split(text, ' ') AS words
-        |        FROM documents)),
-        |ex AS (SELECT doc_id, source, unnest(shingles) AS shingle FROM sh),
-        |sz AS (SELECT doc_id, len(shingles) AS nsh FROM sh),
-        |inter AS MATERIALIZED (
-        |  SELECT l.doc_id AS a, r.doc_id AS b, COUNT(*) AS i
-        |  FROM ex l JOIN ex r ON l.shingle = r.shingle
-        |    AND l.source = r.source AND l.doc_id < r.doc_id
-        |  GROUP BY 1, 2),
-        |pairs AS MATERIALIZED (
-        |  SELECT a, b FROM inter
-        |  JOIN sz sa ON inter.a = sa.doc_id
-        |  JOIN sz sb ON inter.b = sb.doc_id
-        |  WHERE i::DOUBLE / least(sa.nsh, sb.nsh)::DOUBLE >= 0.10),
-        |sym AS MATERIALIZED (
-        |  SELECT a AS u, b AS v FROM pairs
-        |  UNION SELECT b AS u, a AS v FROM pairs),
-        |nodes AS (SELECT DISTINCT u AS node FROM sym),
-        |reach(node, r) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT s.u, rr.r FROM sym s JOIN reach rr ON s.v = rr.node),
-        |lab AS (SELECT node, MIN(r) AS comp FROM reach GROUP BY node)
-        |SELECT node AS doc_id, comp AS canon, (node = comp) AS keep,
-        |  COUNT(*) OVER (PARTITION BY comp) AS csize
-        |FROM lab ORDER BY doc_id""".stripMargin)
+    "q112_personalized_pagerank" ->
+      pprOracleSql(iters = 5, scale = 1000000000000L),
+
+    "q113_label_propagation" -> lpaOracleSql(iters = 4),
+
+    // q114: the q111 graph's canonical edges → capped adjacency →
+    // pivot self-join → NOT EXISTS anti-check. All-integer scoring
+    // (1000000 // deg sums exactly), mirroring linkPredict line by
+    // line.
+    "q114_link_prediction" ->
+      s"""WITH
+        |${triGraphSql()},
+        |deg AS (
+        |  SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
+        |    SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
+        |  GROUP BY node),
+        |adj AS MATERIALIZED (
+        |  SELECT s.w, s.n, d.deg AS degw FROM (
+        |    SELECT u AS w, v AS n FROM e
+        |    UNION ALL SELECT v AS w, u AS n FROM e) s
+        |  JOIN deg d ON s.w = d.node
+        |  WHERE d.deg <= 50),
+        |sc AS MATERIALIZED (
+        |  SELECT l.n AS a, r.n AS b, CAST(COUNT(*) AS BIGINT) AS common,
+        |    CAST(SUM(1000000 // l.degw) AS BIGINT) AS ra_ppm
+        |  FROM adj l JOIN adj r ON l.w = r.w AND l.n < r.n
+        |  GROUP BY 1, 2)
+        |SELECT a, b, common, ra_ppm FROM sc
+        |WHERE common >= 1 AND NOT EXISTS (
+        |  SELECT 1 FROM e WHERE e.u = sc.a AND e.v = sc.b)
+        |ORDER BY a, b""".stripMargin,
+
+    "q115_kcore" -> kcoreOracleSql(k = 5L, rounds = 12),
+
+    "q116_random_walks" ->
+      s"""WITH
+         |${walkCtesSql(4)}
+         |SELECT walk, path FROM w4 ORDER BY walk""".stripMargin,
+
+    // q117: positions come from the per-step walk CTEs (cur at step t),
+    // NOT from re-parsing the path string the Spark side splits — a
+    // structurally different derivation of the same sequence.
+    "q117_skipgram_pairs" ->
+      s"""WITH
+         |${walkCtesSql(4)},
+         |pos AS MATERIALIZED (
+         |${(0 to 4).map(t =>
+              s"  SELECT walk, $t AS pos, cur FROM w$t")
+             .mkString("\n  UNION ALL\n")}),
+         |pr AS (
+         |  SELECT p1.cur AS center, p2.cur AS context
+         |  FROM pos p1 JOIN pos p2 ON p1.walk = p2.walk
+         |    AND p2.pos <> p1.pos AND abs(p2.pos - p1.pos) <= 2)
+         |SELECT center, context, CAST(COUNT(*) AS BIGINT) AS cnt
+         |FROM pr GROUP BY 1, 2 ORDER BY center, context""".stripMargin,
+
+    "q118_nearest_seed" -> nearestSeedOracleSql(depth = 4),
+
+    "q119_weighted_walks" ->
+      s"""WITH
+         |${walkCtesSql(3, weighted = true, startsMod = 11)}
+         |SELECT walk, path FROM w3 ORDER BY walk""".stripMargin
+  )
 }

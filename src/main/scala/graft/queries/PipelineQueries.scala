@@ -1,44 +1,34 @@
 package graft.queries
 
-import graft.operators.{ConnectedComponents, Multimodal}
+import graft.core.Conll
+import graft.functions.SpanF1
+import graft.operators.Multimodal
 import graft.pipeline.{FixtureSpark, KgPipeline}
 import graft.sources.Tables._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** KG-construction pipeline stages exposed as driver queries. These run on
-  * the deterministic generated `pages` fixtures (SURVEY.md §3.4 — the
-  * reference mount was empty), not on sfDir tables, so they are rows-only
-  * for the driver; exact correctness is asserted against the golden plants
-  * in KgPipelineSpec. Sized by sfDir so the bench exercises them harder. */
-object PipelineQueries {
-  type QFn = (SparkSession, String) => DataFrame
+/** KG-construction pipeline stages exposed as driver queries (text,
+  * mentions, triples, CoNLL export, span F1), plus the multimodal
+  * binary-payload operators. The stages run on the deterministic generated
+  * `pages` fixtures (SURVEY.md §3.4 — the reference mount was empty), not
+  * on sfDir tables, so they are rows-only for the driver; exact
+  * correctness is asserted against the golden plants in KgPipelineSpec.
+  * Sized by sfDir so the bench exercises them harder. The multimodal
+  * queries decode synthetic media derived from `documents` and are
+  * oracled by replaying that derivation in SQL. */
+object PipelineQueries extends graft.QueryModule {
 
   private def nPages(d: String): Long =
     if (d.contains("0.1")) 4000L else if (d.contains("0.01")) 1000L else 300L
 
+  /** q66/q67 keep their own, smaller page counts. */
+  private def conllPages(d: String): Long =
+    if (d.contains("0.1")) 2000L else 400L
+
+  /** The fixture linking model, broadcast once per query run. */
   private def model(s: SparkSession) =
     s.sparkContext.broadcast(KgPipeline.fixtureModel())
-
-  /** Chain edges over a key column: k → k+1 within blocks of 50 — the
-    * q63 oracled topology. On q88's bridged variant below, the CC root
-    * update cuts the fixpoint from 22 to 7 rounds (BASELINE.md). */
-  def chainEdges(c: DataFrame): DataFrame =
-    c.where(col("k") % 50 =!= 49)
-      .select(col("k").as("src"), (col("k") + 1).as("dst"))
-
-  /** q88's bridged topology: chains plus three bridge families fusing
-    * chains per 250-block, so two labels race into one component (merge
-    * contention) while staying DuckDB WITH RECURSIVE-closable. */
-  def bridgedChainEdges(c: DataFrame): DataFrame = {
-    val b1 = c.where(col("k") % 250 === 0)
-      .select(col("k").as("src"), (col("k") + 50).as("dst"))
-    val b2 = c.where(col("k") % 250 === 10)
-      .select(col("k").as("src"), (col("k") + 110).as("dst"))
-    val b3 = c.where(col("k") % 250 === 75)
-      .select(col("k").as("src"), (col("k") + 50).as("dst"))
-    chainEdges(c).unionByName(b1).unionByName(b2).unionByName(b3)
-  }
 
   private def canon(s: SparkSession) = {
     val canonicalById = graft.core.FixtureGen.entities()
@@ -74,36 +64,6 @@ object PipelineQueries {
         .orderBy("pred")
     }),
 
-    "q63_connected_components" -> ((s, d) => {
-      // edges DERIVED from the sf-dir customer table (chains of 50 within
-      // c_custkey blocks) so DuckDB's WITH RECURSIVE closure can verify the
-      // distributed fixpoint end-to-end — the full per-node labeling, not a
-      // histogram. Chain length 50 forces ~log2(50) pointer-jump rounds;
-      // the hub-degree-2000 fixture case stays covered by OperatorsSpec.
-      val c = graft.sources.Tables.customer(s, d)
-        .select(col("c_custkey").cast("long").as("k"))
-      ConnectedComponents.run(s, chainEdges(c))
-        .select(col("node"), col("comp"))
-        .orderBy("node")
-    }),
-
-    "q88_cc_bridged" -> ((s, d) => {
-      // q63's oracled topology is the friendliest case (disjoint chains:
-      // pointer-jump depth, no merges). This variant adds cross-links so
-      // the HASH-CHECKED path also exercises label-merge contention —
-      // three chains fused per 250-block, with block m+2 receiving two
-      // racing labels (block m's min via one bridge, block m+1's via
-      // another) — while staying WITH RECURSIVE-closable in DuckDB
-      // (components ≤ 150 nodes). dst endpoints are pure arithmetic on
-      // the src key, identical on both sides, so node-set parity holds
-      // even past the max customer key.
-      val c = graft.sources.Tables.customer(s, d)
-        .select(col("c_custkey").cast("long").as("k"))
-      ConnectedComponents.run(s, bridgedChainEdges(c))
-        .select(col("node"), col("comp"))
-        .orderBy("node")
-    }),
-
     "q64_multimodal_meta" -> ((s, d) => {
       val media = Multimodal.syntheticMedia(documents(s, d))
       Multimodal.decodeMeta(media)
@@ -120,6 +80,47 @@ object PipelineQueries {
           round(aggregate(col("features"), lit(0.0),
             (acc, v) => acc + v.cast("double")), 5).as("feature_sum"))
         .orderBy("media_id")
+    }),
+
+    "q66_conll_export" -> ((s, d) => {
+      val pages = FixtureSpark.pages(s, conllPages(d), 32)
+      import s.implicits._
+      KgPipeline.sentences(pages, model(s))
+        .groupByKey(_.url)
+        .mapGroups { (url, rows) =>
+          val sents = rows.toSeq.sortBy(_.sentIdx)
+            .map(r => (r.tokens, r.tags))
+          (url, Conll.format(url, sents))
+        }
+        .toDF("url", "conll")
+        .select(col("url"), length(col("conll")).as("conll_len"),
+          substring(col("conll"), 1, 40).as("head"))
+        .orderBy("url")
+    }),
+
+    "q67_span_f1" -> ((s, d) => {
+      // predicted vs golden mention spans → full outer join → typed UDAF;
+      // fixture construction makes P=R=F1=1.0 (asserted in SpanF1Spec)
+      val pages = FixtureSpark.pages(s, conllPages(d), 32)
+      import s.implicits._
+      val pred = KgPipeline.mentions(pages, model(s)).toDF()
+        .select(col("url"), col("sentIdx"), col("beginTok"), col("endTok"),
+          col("cls")).withColumn("isPred", lit(true))
+      val gold = pages.flatMap { p =>
+        graft.core.FixtureGen.page(
+          p.url.substring(p.url.lastIndexOf('p') + 1).toLong) match {
+          case g => g.sentences.flatMap(gs => gs.mentions.map(m =>
+            (g.url, m.sentIdx, m.beginTok, m.endTok, m.cls)))
+        }
+      }.toDF("url", "sentIdx", "beginTok", "endTok", "cls")
+        .withColumn("isGold", lit(true))
+      val joined = pred.join(gold,
+          Seq("url", "sentIdx", "beginTok", "endTok", "cls"), "full_outer")
+        .select(coalesce(col("isPred"), lit(false)).as("isPred"),
+          coalesce(col("isGold"), lit(false)).as("isGold"))
+        .as[SpanF1.SpanFlag]
+      joined.select(SpanF1.aggregator.toColumn).toDF()
+        .select(col("precision"), col("recall"), col("f1"))
     }),
 
     "q80_multimodal_resize" -> ((s, d) => {
@@ -142,24 +143,20 @@ object PipelineQueries {
     })
   )
 
-  /** Most entries are rows-only (generated input / stubs — each with an
-    * exact ScalaTest spec); the CC fixpoint is oracled by a recursive
-    * reachability closure over the same derived edge set (SURVEY.md §2.f).
-    * The closure materializes Σ size² pairs per component — fine for the
-    * 50-node blocks here; the distributed fixpoint itself is O(E log n). */
   val oracles: Map[String, String] = Map(
-    // frameSample over syntheticMedia is arithmetic on strlen(text) and
-    // the doc_id-derived width: every emitted frame is exactly `width`
-    // bytes and frames at indices 0, k, 2k, ... below body_len // width
-    "q81_frame_sample" ->
-      """WITH f AS (
-        |  SELECT doc_id AS media_id,
-        |    strlen(text) // (16 + doc_id % 64) AS nf,
-        |    16 + doc_id % 64 AS w
-        |  FROM documents)
-        |SELECT media_id, (nf - 1) // 4 + 1 AS n_frames,
-        |  CAST(((nf - 1) // 4 + 1) * w AS BIGINT) AS frame_bytes
-        |FROM f WHERE nf > 0 ORDER BY media_id""".stripMargin,
+    // syntheticMedia's header is pure doc_id arithmetic (w = 16 + id%64,
+    // h = 16 + (id/64)%64, 3 channels, fmt = id%2) and its body is the
+    // UTF-8 text bytes — so the decode/resize groupBys are mirrorable in
+    // SQL exactly, graduating q64/q80 from rows-only to hash-checked.
+    "q64_multimodal_meta" ->
+      """SELECT CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END
+        |    AS kind,
+        |  CAST(3 AS INTEGER) AS channels,
+        |  COUNT(*) AS n,
+        |  CAST(SUM(8 + strlen(text)) AS BIGINT) AS total_bytes,
+        |  CAST(MIN(16 + doc_id % 64) AS INTEGER) AS min_w,
+        |  CAST(MAX(16 + (doc_id // 64) % 64) AS INTEGER) AS max_h
+        |FROM documents GROUP BY 1, 2 ORDER BY kind, channels""".stripMargin,
 
     // the STUB feature extractor (16 block-means over body bytes) replayed
     // with float32 emulation: DuckDB REAL division is the same
@@ -186,20 +183,6 @@ object PipelineQueries {
         |  round(list_aggregate(outs, 'sum'), 5) AS feature_sum
         |FROM feat ORDER BY media_id""".stripMargin,
 
-    // syntheticMedia's header is pure doc_id arithmetic (w = 16 + id%64,
-    // h = 16 + (id/64)%64, 3 channels, fmt = id%2) and its body is the
-    // UTF-8 text bytes — so the decode/resize groupBys are mirrorable in
-    // SQL exactly, graduating q64/q80 from rows-only to hash-checked.
-    "q64_multimodal_meta" ->
-      """SELECT CASE WHEN doc_id % 2 = 0 THEN 'image' ELSE 'audio' END
-        |    AS kind,
-        |  CAST(3 AS INTEGER) AS channels,
-        |  COUNT(*) AS n,
-        |  CAST(SUM(8 + strlen(text)) AS BIGINT) AS total_bytes,
-        |  CAST(MIN(16 + doc_id % 64) AS INTEGER) AS min_w,
-        |  CAST(MAX(16 + (doc_id // 64) % 64) AS INTEGER) AS max_h
-        |FROM documents GROUP BY 1, 2 ORDER BY kind, channels""".stripMargin,
-
     "q80_multimodal_resize" ->
       """WITH m AS (
         |  SELECT CASE WHEN doc_id % 2 = 0 THEN 'img' ELSE 'aud' END
@@ -214,42 +197,17 @@ object PipelineQueries {
         |    AS total_bytes
         |FROM m GROUP BY format ORDER BY format""".stripMargin,
 
-    "q88_cc_bridged" ->
-      """WITH RECURSIVE
-        |ch AS (SELECT c_custkey AS src, c_custkey + 1 AS dst
-        |       FROM customer WHERE c_custkey % 50 <> 49),
-        |b1 AS (SELECT c_custkey AS src, c_custkey + 50 AS dst
-        |       FROM customer WHERE c_custkey % 250 = 0),
-        |b2 AS (SELECT c_custkey AS src, c_custkey + 110 AS dst
-        |       FROM customer WHERE c_custkey % 250 = 10),
-        |b3 AS (SELECT c_custkey AS src, c_custkey + 50 AS dst
-        |       FROM customer WHERE c_custkey % 250 = 75),
-        |edges AS (SELECT * FROM ch UNION ALL SELECT * FROM b1
-        |          UNION ALL SELECT * FROM b2 UNION ALL SELECT * FROM b3),
-        |sym AS (SELECT src AS u, dst AS v FROM edges
-        |        UNION SELECT dst AS u, src AS v FROM edges),
-        |nodes AS (SELECT DISTINCT u AS node FROM sym),
-        |reach(node, r) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT s.u, rr.r FROM sym s JOIN reach rr ON s.v = rr.node
-        |)
-        |SELECT node, MIN(r) AS comp FROM reach
-        |GROUP BY node ORDER BY node""".stripMargin,
-
-    "q63_connected_components" ->
-      """WITH RECURSIVE
-        |edges AS (SELECT c_custkey AS src, c_custkey + 1 AS dst
-        |          FROM customer WHERE c_custkey % 50 <> 49),
-        |sym AS (SELECT src AS u, dst AS v FROM edges
-        |        UNION SELECT dst AS u, src AS v FROM edges),
-        |nodes AS (SELECT DISTINCT u AS node FROM sym),
-        |reach(node, r) AS (
-        |  SELECT node, node FROM nodes
-        |  UNION
-        |  SELECT s.u, rr.r FROM sym s JOIN reach rr ON s.v = rr.node
-        |)
-        |SELECT node, MIN(r) AS comp FROM reach
-        |GROUP BY node ORDER BY node""".stripMargin
+    // frameSample over syntheticMedia is arithmetic on strlen(text) and
+    // the doc_id-derived width: every emitted frame is exactly `width`
+    // bytes and frames at indices 0, k, 2k, ... below body_len // width
+    "q81_frame_sample" ->
+      """WITH f AS (
+        |  SELECT doc_id AS media_id,
+        |    strlen(text) // (16 + doc_id % 64) AS nf,
+        |    16 + doc_id % 64 AS w
+        |  FROM documents)
+        |SELECT media_id, (nf - 1) // 4 + 1 AS n_frames,
+        |  CAST(((nf - 1) // 4 + 1) * w AS BIGINT) AS frame_bytes
+        |FROM f WHERE nf > 0 ORDER BY media_id""".stripMargin
   )
 }

@@ -1,14 +1,14 @@
 package graft.queries
 
-import graft.streaming.EventsStream
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.streaming.{DocsStream, EventsStream}
 import org.apache.spark.sql.functions._
 
-/** Round-3 additions: the flatMapGroupsWithState streaming sessionizer
-  * surfaced as a driver query (it previously existed only in specs).
+/** Structured Streaming operators surfaced as driver queries: the
+  * flatMapGroupsWithState sessionizer (q87) and sharded Space-Saving heavy
+  * hitters (q107). Each streams a table of the sf dir into a memory sink,
+  * materializes the small result and drops the sink table.
   */
-object Round3Queries {
-  type QFn = (SparkSession, String) => DataFrame
+object StreamingQueries extends graft.QueryModule {
 
   /** Memory-sink query names must be unique per start within a session
     * (Bench runs every query twice: warm-up + timed). */
@@ -16,7 +16,7 @@ object Round3Queries {
 
   /** Hard cap on the q87 driver-side collect (rows = distinct users;
     * the driver testdata has 50). */
-  private[queries] val MaxSessionUsers = 100000L
+  private val MaxSessionUsers = 100000L
 
   val queries: Map[String, QFn] = Map(
     "q87_stream_sessionize" -> ((s, d) => {
@@ -68,10 +68,44 @@ object Round3Queries {
         s.catalog.dropTempView(name)
         ()
       }
+    }),
+
+    // Streaming heavy hitters: the q103 sketch over an unbounded
+    // document stream — tokens shard by word hash, each shard holds ONE
+    // capacity-bounded Space-Saving summary in the state store
+    // (mapGroupsWithState), so streaming state is nShards × capacity
+    // counters however long the stream runs (per-word keyed state would
+    // grow with the vocabulary). In the exact regime (shard vocab ≤
+    // capacity, implied by the corpus pin in OracleAssumptions) the
+    // shard-summary union IS the exact count table, so the query shares
+    // q103's DuckDB oracle. Correct at ANY trigger count — state
+    // accumulates, the reader takes each shard's newest emission — so
+    // unlike q87 no single-batch requirement (two-trigger equality
+    // pinned in StreamingSpec).
+    "q107_stream_heavy_hitters" -> ((s, d) => {
+      val src = new java.io.File(s"$d/documents.parquet")
+      val stream =
+        if (src.isDirectory) DocsStream.heavyHittersStream(s,
+          src.getAbsolutePath, None, capacity = 4096, nShards = 8)
+        else DocsStream.heavyHittersStream(s, d,
+          Some("documents.parquet"), capacity = 4096, nShards = 8)
+      val name = s"q107_hh_${runSeq.incrementAndGet()}"
+      val tbl = EventsStream.runToMemory(s, stream, name, "update")
+      try {
+        val flat = DocsStream.latestShardCounters(tbl)
+          .orderBy(col("cnt").desc, col("word").asc).limit(20)
+        // ≤ 20 rows by construction; materialize so the memory-sink
+        // table can be dropped (q87 convention)
+        val rows = flat.collect()
+        s.createDataFrame(java.util.Arrays.asList(rows: _*), flat.schema)
+      } finally {
+        s.catalog.dropTempView(name)
+        ()
+      }
     })
   )
 
-  /** Session counts per user are insensitive to equal-timestamp event
+  /** q87: session counts per user are insensitive to equal-timestamp event
     * order (equal ts ⇒ gap 0 ⇒ same session), so the stream's
     * epoch-only per-trigger sort and the oracle's (ts, event_id) order
     * agree on every aggregated column. Gaps compare FRACTIONAL epoch
@@ -102,6 +136,13 @@ object Round3Queries {
         |SELECT user_id, COUNT(*) AS n_closed,
         |  CAST(SUM(n_events) AS BIGINT) AS events_in_closed,
         |  MAX(n_events) AS max_session_events
-        |FROM closed GROUP BY user_id ORDER BY user_id""".stripMargin
+        |FROM closed GROUP BY user_id ORDER BY user_id""".stripMargin,
+
+    // exact streaming regime == exact counting: LITERALLY q103's oracle
+    // (licensed by the same vocab-fits-capacity pin — sharding can only
+    // shrink each summary's key space); referenced, not copied, so the
+    // two can never drift apart
+    "q107_stream_heavy_hitters" ->
+      TextQueries.oracles("q103_heavy_hitters")
   )
 }

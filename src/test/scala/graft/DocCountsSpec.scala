@@ -27,4 +27,17 @@ class DocCountsSpec extends AnyFunSuite {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
+
+  // a key defined twice would otherwise be silently folded to the last one
+  test("every query key has one domain module, which also defines its oracle") {
+    val keys = SparkEntry.domains.flatMap(_.queries.keys)
+    val twice = keys.diff(keys.distinct)
+    assert(twice.isEmpty, s"query keys in two domains: $twice")
+    for (m <- SparkEntry.domains) {
+      val foreign = m.oracles.keySet -- m.queries.keySet
+      val name = m.getClass.getSimpleName.stripSuffix("$")
+      assert(foreign.isEmpty,
+        s"$name defines oracles of other domains' queries: $foreign")
+    }
+  }
 }

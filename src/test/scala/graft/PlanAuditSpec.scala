@@ -100,7 +100,7 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     val labels = spark.range(8).select(col("id").as("node"),
       (col("id") % 3).as("comp"))
-    val dec = graft.queries.Round7Queries.withGroupSize(labels, "comp")
+    val dec = graft.queries.GraphQueries.withGroupSize(labels, "comp")
     dec.collect()
     val plan = dec.queryExecution.executedPlan.toString
     assert(!plan.contains("Window"), plan.take(1500))

@@ -268,7 +268,7 @@ class Round3Spec extends SparkTestBase {
   // ---------------- q87 streaming sessionizer query ----------------
 
   test("q87 equals batch sessions minus each user's open session") {
-    val got = graft.queries.Round3Queries
+    val got = graft.queries.StreamingQueries
       .queries("q87_stream_sessionize")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3))).toSet
